@@ -99,3 +99,28 @@ def test_resume_with_quarantine_sinks(spark, sf_dir, out_dir):
     assert s_clean.select(*b_clean.columns).exceptAll(b_clean).count() == 0
     assert s_dirty.count() == b_dirty.count()
     assert s_dirty.select(*b_dirty.columns).exceptAll(b_dirty).count() == 0
+
+
+def test_missing_manifest_reads_empty(spark, out_dir):
+    run = CheckpointedRun(spark, os.path.join(out_dir, "fresh"))
+    m = run.read_manifest()
+    assert m.count() == 0
+    assert m.columns == [
+        "run_id", "partition_id", "check_name", "status", "n_checked",
+        "n_violations", "metrics_json", "completed_ts",
+    ]
+    assert run.done_partitions() == []
+
+
+def test_unreadable_manifest_raises(spark, out_dir):
+    """A manifest that exists but cannot be read is an error, not "no
+    manifest": treating it as empty would silently re-run every
+    partition.  Two conflicting partition column names fail Spark's
+    partition discovery when the manifest is read."""
+    run = CheckpointedRun(spark, out_dir)
+    for sub in ("a=1", "b=2"):
+        os.makedirs(os.path.join(run.manifest_path, sub))
+        with open(os.path.join(run.manifest_path, sub, "part-0.parquet"), "wb") as f:
+            f.write(b"not parquet")
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        run.done_partitions()

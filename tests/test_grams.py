@@ -223,20 +223,15 @@ def test_boilerplate_grams_builders_agree(spark, sf_dir):
         assert h.exceptAll(a).count() == 0
 
 
-@pytest.mark.parametrize("impl", ["native", "hybrid"])
+@pytest.mark.parametrize("impl", ["native"])
 @pytest.mark.parametrize("edge_tokens", [None, 3, 32])
 @pytest.mark.parametrize("n", [1, 2, 5])
 def test_vectorized_impls_equal_python_impl(spark, edge_df, n, edge_tokens, impl):
-    """The r5 fully-vectorized cutter (ascii_split_whitespace + take +
-    binary_join + Arrow group_by) and the r5 hybrid edge cutter (python
-    maxsplit-bounded extraction + Arrow/numpy windowing) must match the
-    per-doc python loop row-for-row in every mode they serve — 'native'
-    everywhere, 'hybrid' in edge mode (its bounded split never
-    tokenizes a long doc's middle; full mode has no bound to exploit)."""
+    """The fully-vectorized cutter (ascii_split_whitespace + take +
+    binary_join + Arrow group_by) must match the per-doc python loop
+    row-for-row in every mode: full-document and edge-window cuts,
+    distinct, count and position rows."""
     from xjs.pipeline.grams import ngram_count_rows, ngram_pos_rows
-
-    if impl == "hybrid" and edge_tokens is None:
-        pytest.skip("hybrid is an edge-mode cutter only")
 
     a = ngram_rows(edge_df, ["doc_id"], "text", n, edge_tokens, impl=impl)
     b = ngram_rows(edge_df, ["doc_id"], "text", n, edge_tokens, impl="python")

@@ -205,16 +205,15 @@ class TestGopher:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert "MapInArrow" in plan
-        # catalyst builders: no Python worker at all
+        # catalyst (hof) builder: no Python worker at all
         docs = H.gopher_corpus(spark, sf_dir)
-        for impl in ("native", "hof"):
-            p = (
-                H.gopher_features(docs, impl=impl)
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-            assert "Exchange" not in p
-            assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-            assert "MapInArrow" not in p
+        p = (
+            H.gopher_features(docs, impl="hof")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "Exchange" not in p
+        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+        assert "MapInArrow" not in p
 
 
 def test_fixture_determinism(spark, sf_dir):
@@ -242,21 +241,18 @@ class TestGopherBuilders:
         (12, "## #... #"),
         (13, None),                            # null text -> null features
         (14, "a\xa0b the of"),                 # NBSP is NOT whitespace
-        # CRLF / lone-CR endings: '\r' stays inside the line for the
+        # CRLF / lone-CR endings: '\r' stays inside the line for both
         # '\n'-splitting builders, so 'crlf...\r' is NOT an ellipsis
-        # line and '\r- bullet' is NOT a bullet line; Java (?m)^/$
-        # anchors fire around \r too, which the native impl must not
-        # inherit (ADVICE r5)
+        # line and '\r- bullet' is NOT a bullet line
         (15, "crlf...\r\nnext...\nmid\r- bullet\r\nend…"),
     ]
 
     def test_builders_row_identical_edges(self, spark):
         df = spark.createDataFrame(self.EDGE_DOCS, "doc_id long, text string")
         ref = sorted(H.gopher_features(df, impl="hof").collect())
-        for impl in ("native", "arrow"):
-            got = sorted(H.gopher_features(df, impl=impl).collect())
-            assert got == ref, impl
-        # null text propagates null features + null keep in every impl
+        got = sorted(H.gopher_features(df, impl="arrow").collect())
+        assert got == ref
+        # null text propagates null features + null keep in both builders
         null_row = [r for r in ref if r.doc_id == 13][0]
         assert null_row.n_words is None and null_row.keep is None
         # NBSP stays inside the token: 'a\xa0b' is ONE 3-char word
@@ -266,14 +262,40 @@ class TestGopherBuilders:
     def test_builders_row_identical_fixture(self, spark, sf_dir):
         docs = H.gopher_corpus(spark, sf_dir)
         ref = sorted(H.gopher_features(docs, impl="hof").collect())
-        for impl in ("native", "arrow"):
-            got = sorted(H.gopher_features(docs, impl=impl).collect())
-            assert got == ref, impl
+        got = sorted(H.gopher_features(docs, impl="arrow").collect())
+        assert got == ref
 
-    def test_unknown_impl_raises(self, spark):
-        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError):
-            H.gopher_features(df, impl="nope")
+
+#: (module, name) pairs every operator must refuse: a typo, and each
+#: variant name the module no longer implements
+UNKNOWN_IMPLS = [
+    ("grams", "hybrid"), ("grams", "nope"),
+    ("gopher", "native"), ("gopher", "nope"),
+    ("suffix", "rank"), ("suffix", "hash"), ("suffix", "nope"),
+    ("similarity", "pairs"), ("similarity", "nope"),
+]
+
+
+@pytest.mark.parametrize(
+    "module,name", UNKNOWN_IMPLS, ids=[f"{m}-{n}" for m, n in UNKNOWN_IMPLS]
+)
+def test_unknown_impl_raises(spark, module, name):
+    """An unknown implementation name raises instead of silently
+    running some other implementation."""
+    from xjs.pipeline import similarity
+    from xjs.pipeline.grams import ngram_rows
+    from xjs.pipeline.suffix import char_window_keys
+
+    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, emb array<double>")
+    build = {
+        "grams": lambda: ngram_rows(docs, ["doc_id"], "text", 2, impl=name),
+        "gopher": lambda: H.gopher_features(docs, impl=name),
+        "suffix": lambda: char_window_keys(docs, method=name),
+        "similarity": lambda: similarity.brute_force_topk_df(emb, name),
+    }[module]
+    with pytest.raises(ValueError):
+        build()
 
 
 def test_c4_null_text_explicit_drop(spark):

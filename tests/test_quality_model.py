@@ -103,3 +103,26 @@ def test_token_instances_count_twice(spark):
            for r in quality_model.classifier_scores(df).collect()}
     w = got[1] - model["b_micro"]
     assert got[2] == model["b_micro"] + 2 * w
+
+
+def test_two_bucket_counts_on_one_worker(spark, tmp_path):
+    """The per-worker token -> bucket memo must not leak buckets from
+    one artifact into another with a different B: score the committed
+    artifact, then a B=7 artifact over the same tokens in the same
+    session, each against the catalyst reference."""
+    import pickle as pkl
+
+    small = str(tmp_path / "qc_b7.pkl")
+    with open(small, "wb") as f:
+        pkl.dump({"B": 7, "b_micro": -5,
+                  "w_micro": [100, -200, 300, -400, 500, -600, 700]}, f)
+    df = spark.createDataFrame(
+        [(1, "the scan window batch"), (2, "repeat repeat café"),
+         (3, "alpha beta gamma delta")],
+        "doc_id long, text string").coalesce(1)
+    for artifact in (quality_model.DEFAULT_QC, small):
+        a = sorted(map(tuple, quality_model.classifier_scores(
+            df, artifact).collect()))
+        c = sorted(map(tuple, quality_model.classifier_scores(
+            df, artifact, impl="catalyst").collect()))
+        assert a == c, artifact

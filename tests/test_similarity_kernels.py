@@ -39,15 +39,13 @@ def test_kernel_equals_hof(spark, sf_dir, fn):
     )
 
 
-def test_brute_force_all_three_builders_agree(spark, sf_dir):
+def test_brute_force_builders_agree(spark, sf_dir):
     """'arrow' (map-side combine: broadcast query set, one corpus
-    pass, per-batch local top-k with the 1e-4 raw-score margin),
-    'pairs' (explicit crossJoin + Arrow cosine kernel), and 'hof'
-    (pure Catalyst) produce identical rows, rounding boundaries and
-    tie-breaks included."""
+    pass, per-batch local top-k with the 1e-4 raw-score margin) and
+    'hof' (crossJoin + pure Catalyst) produce identical rows, rounding
+    boundaries and tie-breaks included."""
     e = sim.load_embeddings(spark, sf_dir)
     r_map = rows(sim.brute_force_topk_df(e, "arrow"))
-    assert r_map == rows(sim.brute_force_topk_df(e, "pairs"))
     assert r_map == rows(sim.brute_force_topk_df(e, "hof"))
     assert len(r_map) == sim.N_QUERIES * sim.TOP_K
 

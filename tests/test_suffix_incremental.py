@@ -163,12 +163,3 @@ def test_rolling_anchor_pushdown_equals_post_filter(spark, corpus, mod):
     )
     assert pushed.count() == post.count() > 0
     assert pushed.exceptAll(post).count() == 0
-
-
-def test_rank_method_refused_for_state_and_anchoring(spark, state_base):
-    df = spark.createDataFrame([(1, "a" * (K + 1))], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        char_state_update(spark, df, os.path.join(state_base, "r"),
-                          method="rank")
-    with pytest.raises(ValueError):
-        char_span_duplicates(df, method="rank", anchor_mod=2)

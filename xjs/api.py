@@ -10,8 +10,11 @@ False
 
 from __future__ import annotations
 
+import copy
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
@@ -76,10 +79,36 @@ def validate_json_column(
     return dynamic_violations(df, schema, json_col, id_col)
 
 
+#: compiled evaluators kept by check_document, least recently used
+#: evicted first (compiling costs several times a typical document's
+#: evaluation)
+_EVALUATOR_CACHE_SIZE = 32
+_evaluators: OrderedDict[str, Callable] = OrderedDict()
+_evaluators_lock = threading.Lock()
+
+
 def check_document(schema: dict, doc) -> list:
     """Single-document validation with the reference's error-dict shape
     — the drop-in for ``Validator(schema).run(doc)`` (normalized: valid
-    data always returns [])."""
+    data always returns []).
+
+    The compiled evaluator is memoized per schema, keyed on
+    ``repr(schema)``.  That key keeps what sorted-key JSON would merge:
+    key order (errors come out in schema order) and Python types
+    (``1`` vs ``1.0`` vs ``True``, tuple vs list).  The evaluator is
+    compiled from a deep copy, so mutating ``schema`` after a call
+    cannot change a cached evaluator."""
     from xjs.dynamic import build_evaluator
 
-    return build_evaluator(schema)(doc)
+    key = repr(schema)
+    with _evaluators_lock:
+        fn = _evaluators.get(key)
+        if fn is not None:
+            _evaluators.move_to_end(key)
+    if fn is None:
+        fn = build_evaluator(copy.deepcopy(schema))
+        with _evaluators_lock:
+            _evaluators[key] = fn
+            if len(_evaluators) > _EVALUATOR_CACHE_SIZE:
+                _evaluators.popitem(last=False)
+    return fn(doc)

@@ -23,6 +23,7 @@ parquet so the sandbox (no Iceberg jars) exercises identical logic.
 
 from __future__ import annotations
 
+import os
 import uuid
 from dataclasses import dataclass
 from typing import List, Optional
@@ -66,10 +67,9 @@ class CheckpointedRun:
     # -- manifest ------------------------------------------------------------
 
     def read_manifest(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
-        except Exception:  # first run: no manifest yet
+        if not os.path.exists(self.manifest_path):  # first run
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
 
     def done_partitions(self) -> List[int]:
         m = self.read_manifest()

@@ -167,16 +167,6 @@ def _v_enum(value, path, kws):
         raise SchemaError(path, "It must be an array, where each element is unique")
 
 
-def _v_schema_array(value, path, kws):
-    if type(value) is not list:
-        raise SchemaError(path, "It must be an array")
-    if len(value) == 0:
-        raise SchemaError(path, "It must be an array with at least one element")
-    for i, item in enumerate(value):
-        if not is_schema(item):
-            raise SchemaError(path + [i], "It must be a JSON Schema object")
-
-
 def _v_allof(value, path, kws):
     # reference keywords.py:101-106: array check, then per-element schema
     if type(value) is not list:

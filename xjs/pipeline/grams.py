@@ -34,34 +34,31 @@ from pyspark.sql import DataFrame
 
 _WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
-# Default cutter implementation.  'native' (r5) keeps the whole batch in
+# Default cutter implementation.  'native' keeps the whole batch in
 # Arrow C++/numpy — ascii_split_whitespace (measured 6x RE2's
 # split_pattern_regex, byte-identical fields incl. empties), window
 # gather via take, separator join, and the per-doc DISTINCT as C++ hash
 # group_bys, zero per-doc Python (see _native_gram_parts); 'python' is
-# the r3/r4 per-doc loop kept as the equivalence reference (pinned
-# against 'native' in tests/test_grams.py, and itself pinned against the
+# the per-doc loop kept as the equivalence reference (pinned against
+# 'native' in tests/test_grams.py, and itself pinned against the
 # pure-Catalyst HOF form).
 #
 # 'auto' (the default) picks per MODE, from interleaved 1M-doc A/Bs
-# (BENCH/ab_gram_native_r5.json, BENCH/ab_gram_hybrid_r5.json): native
-# wins full-document cuts (1.2-1.3x — the whole doc must be tokenized
-# anyway, and C++ beats the per-doc loop); EDGE-window cuts stay on the
-# python per-doc loop (its maxsplit-bounded split never tokenizes the
-# page middle; Arrow has no bounded split, so 'native' loses 0.6-1.0x
-# here).  'hybrid' (python bounded extraction + Arrow/numpy windowing)
-# was built to vectorize the loop's other half and measured a TIE
-# WITHIN HOST NOISE vs python across three interleaved sessions
-# (hybrid/python 0.78-1.25x, winner flipping with ambient load and
-# per-mode shape) — not enough evidence to displace the incumbent, so
-# the default stays python and hybrid remains selectable.  Measured
-# policy, not a guess.
+# (BENCH/ab_gram_native_r5.json): native wins full-document cuts
+# (1.2-1.3x — the whole doc must be tokenized anyway, and C++ beats the
+# per-doc loop); EDGE-window cuts stay on the python per-doc loop (its
+# maxsplit-bounded split never tokenizes the page middle; Arrow has no
+# bounded split, so 'native' loses 0.6-1.0x here).  Python extraction
+# feeding Arrow windowing measured a tie with the plain loop and was
+# dropped (BENCH/ab_gram_hybrid_r5.json).  Measured policy, not a guess.
 IMPL = "auto"
 
 
 def _resolve_impl(impl: str, edge_tokens: int | None) -> str:
     if impl == "auto":
         return "python" if edge_tokens is not None else "native"
+    if impl not in ("native", "python"):
+        raise ValueError(f"unknown impl {impl!r}")
     return impl
 
 
@@ -146,63 +143,6 @@ def _native_gram_parts(batch, text_idx: int, n: int, edge_tokens: int | None):
     return row_ids, local_pos, grams
 
 
-def _hybrid_gram_parts(batch, text_idx: int, n: int, edge_tokens: int | None):
-    """Edge-mode cutter that splits the work at its natural seam: the
-    per-doc EXTRACTION stays Python (two ``maxsplit``-bounded regex
-    splits never touch the page middle — the reason the python path
-    beat the native one on page-length docs, see IMPL), while the gram
-    WINDOWING and string joins go vectorized (numpy ragged ranges +
-    Arrow ``take`` + ``binary_join_element_wise``), replacing the
-    ~2*(e-n+1) per-doc ``" ".join`` calls of `_gram_set`.  Semantics
-    are exactly `_gram_set`'s edge mode: short docs (<= 2*edge_tokens
-    tokens) yield their full window set; long docs yield head and tail
-    windows as separate segments so no gram spans the head/tail seam.
-    Output rows are NOT per-doc distinct — `_native_batches`' Arrow
-    group_by handles that, identically to the native path."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    e = edge_tokens
-    texts = batch.column(text_idx).to_pylist()
-    toks: list[str] = []
-    seg_lens: list[int] = []
-    seg_rows: list[int] = []
-
-    def add(seg: list[str], i: int) -> None:
-        if len(seg) >= n:
-            toks.extend(seg)
-            seg_lens.append(len(seg))
-            seg_rows.append(i)
-
-    for i, txt in enumerate(texts):
-        if not txt:
-            continue
-        s = txt.strip(" ")
-        parts = _WS.split(s, maxsplit=2 * e)
-        if len(parts) <= 2 * e:
-            add(parts, i)
-            continue
-        add(parts[:e], i)
-        rev = _WS.split(s[::-1], maxsplit=e)
-        add([t[::-1] for t in rev[:e]][::-1], i)
-
-    if not seg_lens:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, pa.array([], type=pa.string())
-    lens = np.asarray(seg_lens, dtype=np.int64)
-    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    win_m = lens - n + 1
-    gram_start, seg_ids = _ragged_ranges(offs, win_m)
-    row_ids = np.asarray(seg_rows, dtype=np.int64)[seg_ids]
-    flat = pa.array(toks, type=pa.string())
-    parts_a = [flat.take(pa.array(gram_start + j)) for j in range(n)]
-    grams = (
-        parts_a[0] if n == 1 else pc.binary_join_element_wise(*parts_a, " ")
-    )
-    return row_ids, np.zeros(len(row_ids), dtype=np.int64), grams
-
-
 def _native_batches(
     df: DataFrame,
     keys: list[str],
@@ -210,7 +150,6 @@ def _native_batches(
     n: int,
     edge_tokens: int | None,
     mode: str,
-    parts_fn=None,
 ) -> DataFrame:
     """Shared mapInArrow driver for the three native cutters.  mode:
     'distinct' -> (keys..., gram), one row per distinct gram per doc;
@@ -230,11 +169,11 @@ def _native_batches(
     schema = ", ".join([f"{k} {dtypes[k]}" for k in keys] + extra)
     nkeys = len(keys)
 
-    cut = parts_fn or _native_gram_parts
-
     def build(batches: Iterator) -> Iterator:
         for batch in batches:
-            row_ids, local_pos, grams = cut(batch, nkeys, n, edge_tokens)
+            row_ids, local_pos, grams = _native_gram_parts(
+                batch, nkeys, n, edge_tokens
+            )
             idx = pa.array(row_ids)
             key_arrays = [batch.column(j).take(idx) for j in range(nkeys)]
             if mode == "pos":
@@ -318,17 +257,9 @@ def ngram_rows(
     batches through, output bounded by that task's gram count.
     impl 'auto' (default) picks the measured winner per mode (module
     docstring); 'native' = zero-per-doc-Python Arrow/numpy path;
-    'hybrid' (edge mode only) = python bounded extraction + vectorized
-    windowing; 'python' = the per-doc loop reference both are pinned
-    against."""
-    resolved = _resolve_impl(impl, edge_tokens)
-    if resolved == "native":
+    'python' = the per-doc loop reference it is pinned against."""
+    if _resolve_impl(impl, edge_tokens) == "native":
         return _native_batches(df, keys, text_col, n, edge_tokens, "distinct")
-    if resolved == "hybrid" and edge_tokens is not None:
-        return _native_batches(
-            df, keys, text_col, n, edge_tokens, "distinct",
-            parts_fn=_hybrid_gram_parts,
-        )
     import pandas as pd  # noqa: F401
 
     dtypes = dict(df.dtypes)
@@ -376,20 +307,12 @@ def ngram_count_rows(
     per-gram Python) halves the emitted rows on the bench corpus and
     shrinks both the Python→JVM Arrow transfer and the shuffle input.
     Emission is ``mapInArrow`` — RecordBatch out directly, skipping a
-    pandas object-array round-trip.  impl 'native' (default) runs the
-    cut AND the combine fully vectorized (Arrow group_by, no Counter);
-    'hybrid' (edge mode) = python bounded extraction + vectorized
-    windowing/combine; 'python' is the per-doc Counter loop both are
-    pinned against; 'auto' (default) picks the measured winner per
-    mode (module docstring)."""
-    resolved = _resolve_impl(impl, edge_tokens)
-    if resolved == "native":
+    pandas object-array round-trip.  impl 'native' runs the cut AND the
+    combine fully vectorized (Arrow group_by, no Counter); 'python' is
+    the per-doc Counter loop it is pinned against; 'auto' (default)
+    picks the measured winner per mode (module docstring)."""
+    if _resolve_impl(impl, edge_tokens) == "native":
         return _native_batches(df, keys, text_col, n, edge_tokens, "count")
-    if resolved == "hybrid" and edge_tokens is not None:
-        return _native_batches(
-            df, keys, text_col, n, edge_tokens, "count",
-            parts_fn=_hybrid_gram_parts,
-        )
     import pyarrow as pa
 
     dtypes = dict(df.dtypes)

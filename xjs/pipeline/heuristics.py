@@ -18,9 +18,9 @@ Scale shape: both operators are ONE narrow zero-Exchange pass
 Catalyst projection; the Gopher feature block defaults to an Arrow
 C++/numpy batch kernel (the grams.py pattern — one tokenization per
 batch feeds every feature) after the interleaved A/B showed the
-Catalyst forms tie each other at 8-10s/1M pages and the kernel runs
-them at 1.7s (5.7x, BENCH/ab_gopher_r5.json); 'hof' and 'native'
-remain selectable, all three equivalence-pinned.  At 100 TB both
+Catalyst forms at 8-10s/1M pages and the kernel at 1.7s (5.7x,
+BENCH/ab_gopher_r5.json); the 'hof' array form stays selectable as
+the reference the kernel is equivalence-pinned to.  At 100 TB both
 compose in front of the shuffle-bearing stages (dedup, export) exactly
 where a production pipeline puts its cheap gates: the filter prunes
 rows BEFORE anything pays a shuffle for them.
@@ -261,66 +261,45 @@ GOPHER_RULES = (
 
 #: default feature builder — chosen by interleaved 1M-page A/B
 #: (BENCH/ab_gopher_r5.json); 'hof' is the array-semantics reference
-#: all builders are equivalence-pinned to
+#: the kernel is equivalence-pinned to
 BUILDER = "arrow"
 
 _FEATS = ("n_words", "word_chars", "n_sym", "n_lines", "bullet_lines",
           "ellipsis_lines", "alpha_words", "stop_hits")
 
 
-def _gopher_catalyst_feats(df, id_col, text_col, impl):
-    """Catalyst feature builders: 'hof' (arrays + higher-order
-    filters — the readable reference; HOF lambdas are interpreted and
-    the words array is re-split per feature) and 'native' (every count
-    as a scan-fused regexp_count/rlike: words = \\S+ runs, alpha words
-    = \\S*[A-Za-z]\\S* non-overlapping matches — one per alpha-bearing
-    token since a match cannot cross whitespace; (?m) anchors for
-    bullet/ellipsis lines; whitespace-lookaround rlike per required
-    word).  Measured a TIE at 1M pages (8-10s both, interleaved,
-    BENCH/ab_gopher_r5.json): twelve Java-regex passes cost what the
-    array re-splits cost — the Arrow kernel (5.7x) is the fast path."""
+def _gopher_hof_feats(df, id_col, text_col):
+    """Catalyst feature builder: arrays + higher-order filters — the
+    readable reference the Arrow kernel is pinned against (HOF lambdas
+    are interpreted and the words array is re-split per feature).  A
+    scan-fused regexp_count builder measured a tie with this one at 1M
+    pages and was dropped (BENCH/ab_gopher_r5.json)."""
     t = F.col(text_col)
     word_chars = F.length(F.regexp_replace(F.trim(t), r"\s+", ""))
     n_sym = (
         F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
         + (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / F.lit(3)
     ).cast("int")
-    if impl == "native":
-        n_words = F.regexp_count(t, F.lit(r"\S+"))
-        n_lines = F.regexp_count(t, F.lit("\n")) + 1
-        # anchors on LITERAL \n / string ends, not (?m)^ / (?m)$: Java
-        # multiline anchors also fire around \r and \r\n terminators,
-        # so CRLF text diverged from the hof/arrow builders (which
-        # split on '\n' and keep the \r inside the line) — ADVICE r5
-        bullet = F.regexp_count(t, F.lit(r"(?:\A|\n) *(?:- |\* |• )"))
-        ellipsis = F.regexp_count(t, F.lit(r"(?:\.\.\.|…)(?=\n|\z)"))
-        alpha = F.regexp_count(t, F.lit(r"\S*[A-Za-z]\S*"))
-        stop_hits = F.lit(0)
-        for w in REQUIRED_WORDS:
-            stop_hits = stop_hits + t.rlike(
-                rf"(?:^|\s){w}(?:\s|$)"
-            ).cast("int")
-    else:  # hof
-        words = _words(t)
-        n_words = F.size(words)
-        lines = F.split(t, "\n", -1)
-        n_lines = F.size(lines)
-        bullet = F.size(
-            F.filter(
-                lines,
-                lambda l: F.substring(F.ltrim(l), 1, 2).isin(*_BULLETS),
-            )
+    words = _words(t)
+    n_words = F.size(words)
+    lines = F.split(t, "\n", -1)
+    n_lines = F.size(lines)
+    bullet = F.size(
+        F.filter(
+            lines,
+            lambda l: F.substring(F.ltrim(l), 1, 2).isin(*_BULLETS),
         )
-        ellipsis = F.size(
-            F.filter(
-                lines,
-                lambda l: F.endswith(l, F.lit("...")) | F.endswith(l, F.lit("…")),
-            )
+    )
+    ellipsis = F.size(
+        F.filter(
+            lines,
+            lambda l: F.endswith(l, F.lit("...")) | F.endswith(l, F.lit("…")),
         )
-        alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-        stop_hits = F.lit(0)
-        for w in REQUIRED_WORDS:
-            stop_hits = stop_hits + F.array_contains(words, w).cast("int")
+    )
+    alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
+    stop_hits = F.lit(0)
+    for w in REQUIRED_WORDS:
+        stop_hits = stop_hits + F.array_contains(words, w).cast("int")
     return df.select(
         F.col(id_col),
         n_words.alias("n_words"),
@@ -340,9 +319,9 @@ def _gopher_arrow_feats(df, id_col, text_col):
     field-identical in grams.py), one '\\n' split, flat per-token /
     per-line predicate arrays in C++, and exact empty-safe segment
     sums via cumsum differences — zero per-doc Python, every feature
-    from ONE tokenization instead of one re-split (hof) or one regex
-    pass (native) per feature.  Null text -> all-null features, the
-    Catalyst builders' propagation."""
+    from ONE tokenization instead of one re-split per feature (hof).
+    Null text -> all-null features, the Catalyst builder's
+    propagation."""
     import pyarrow as pa
 
     id_field = df.select(id_col).schema.fields[0]
@@ -439,15 +418,14 @@ def gopher_features(
     every ratio rule is cross-multiplied, so the DuckDB oracle
     bit-matches and the verdict cannot drift with float rounding.
 
-    THREE feature builders, row-identical (test-pinned across the
-    whitespace/bullet/ellipsis edge cases, null text, AND the driver
-    fixture), chosen by measured A/B — ``impl='hof'`` (the readable
-    array reference), ``impl='native'`` (scan-fused regexp_count —
-    measured a TIE with hof at 1M pages: twelve Java-regex passes cost
-    what the per-feature array re-splits cost), and ``impl='arrow'``
-    (default: the grams.py-pattern C++ kernel, ONE tokenization per
-    batch feeding every feature — see BENCH/ab_gopher_r5.json for the
-    measured ranking).  The rule layer on top is shared Catalyst.
+    Two feature builders, row-identical (test-pinned across the
+    whitespace/bullet/ellipsis/CRLF edge cases, null text, AND the
+    driver fixture): ``impl='arrow'`` (default: the grams.py-pattern
+    C++ kernel, ONE tokenization per batch feeding every feature,
+    5.7x the array form at 1M pages) and ``impl='hof'`` (the readable
+    array reference it is pinned against; BENCH/ab_gopher_r5.json has
+    the measured ranking, including a dropped regexp_count builder).
+    The rule layer on top is shared Catalyst.
 
     ``sum(len(word))`` is the concatenated-token char count in every
     builder (strip-all-whitespace regex / flat token-length segment
@@ -457,8 +435,8 @@ def gopher_features(
         impl = BUILDER
     if impl == "arrow":
         feats = _gopher_arrow_feats(df, id_col, text_col)
-    elif impl in ("hof", "native"):
-        feats = _gopher_catalyst_feats(df, id_col, text_col, impl)
+    elif impl == "hof":
+        feats = _gopher_hof_feats(df, id_col, text_col)
     else:
         raise ValueError(f"unknown impl {impl!r}")
 

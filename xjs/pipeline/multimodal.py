@@ -20,7 +20,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 META_SCHEMA = (
     "url string, n_bytes int, magic string, feat0 int, feat1 int, feat2 int"
@@ -119,19 +118,3 @@ def resize_images(df: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
             )
 
     return df.select("url", "html").mapInPandas(resize, RESIZE_SCHEMA)
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: explode a (deterministic) frame
-    index list per row; the decode of each frame is the stub.  Shows
-    the schema/partitioning shape a real sampler would use."""
-    n_frames = (F.octet_length("html") % 50 + 1).alias("n_frames")
-    return (
-        df.select("url", n_frames)
-        .select(
-            "url",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )

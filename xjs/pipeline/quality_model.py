@@ -29,6 +29,8 @@ mandate (SURVEY.md §2.10).
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,11 +56,30 @@ def _weights_df(spark: SparkSession, artifact: str):
             int(model["b_micro"]), int(model["B"]))
 
 
-#: per-worker token -> weight-index memo for the Arrow scorer (the
-#: bpe pre-token-LRU precedent: web text repeats words heavily, so the
-#: md5 amortizes to a dict hit across batches on a reused worker)
+#: per-worker (n_buckets, token) -> bucket memo for the Arrow scorer
+#: (the bpe pre-token-LRU precedent: web text repeats words heavily, so
+#: the md5 amortizes to a dict hit across batches on a reused worker).
+#: Keyed by n_buckets too, so two artifacts with different B scored on
+#: one worker never share buckets.
 _BUCKET_MEMO: dict = {}
 _BUCKET_MEMO_CAP = 2_000_000
+
+
+def _bucket_of(tok: str, n_buckets: int) -> int:
+    """int(md5(tok)[:15], 16) % n_buckets through _BUCKET_MEMO.  A
+    module-level function, so the scorer's closure pickles it by
+    reference and every task on a worker shares the one memo (a global
+    read inside the closure would be pickled by value: a fresh empty
+    copy per task)."""
+    key = (n_buckets, tok)
+    b = _BUCKET_MEMO.get(key)
+    if b is None:
+        if len(_BUCKET_MEMO) >= _BUCKET_MEMO_CAP:
+            _BUCKET_MEMO.clear()
+        b = int(hashlib.md5(tok.encode("utf-8"))
+                .hexdigest()[:15], 16) % n_buckets
+        _BUCKET_MEMO[key] = b
+    return b
 
 
 def classifier_scores(
@@ -121,23 +142,11 @@ def _classifier_scores_arrow(
     id_type = dict(df.dtypes)[id_col]
 
     def build(batches: Iterator) -> Iterator:
-        import hashlib
-
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         w = np.array(w_list, dtype=np.int64)
-
-        def bucket_of(tok: str) -> int:
-            b = _BUCKET_MEMO.get(tok)
-            if b is None:
-                if len(_BUCKET_MEMO) >= _BUCKET_MEMO_CAP:
-                    _BUCKET_MEMO.clear()
-                b = int(hashlib.md5(tok.encode("utf-8"))
-                        .hexdigest()[:15], 16) % n_buckets
-                _BUCKET_MEMO[tok] = b
-            return b
 
         for batch in batches:
             text = batch.column(1)
@@ -163,7 +172,7 @@ def _classifier_scores_arrow(
                 n_tokens[row_map] = counts
                 enc = pc.dictionary_encode(flat)
                 uniq = enc.dictionary.to_pylist()
-                wu = w[np.fromiter((bucket_of(t) for t in uniq),
+                wu = w[np.fromiter((_bucket_of(t, n_buckets) for t in uniq),
                                    dtype=np.int64, count=len(uniq))]
                 wvals = wu[enc.indices.to_numpy(
                     zero_copy_only=False).astype(np.int64)]

@@ -50,8 +50,20 @@ DIM = 64
 # factor at 4-25x three times (grams r3, pii md5 r4, boilerplate
 # builder r4) — while the kernels below are constructed to be
 # BIT-IDENTICAL to the HOF fold (not merely close), so the oracle
-# proves the same numbers the fast path produces.
+# proves the same numbers the fast path produces.  Brute force under
+# "arrow" is the map-side-combine pass; a crossJoin + Arrow cosine
+# form measured slowest of the three at 1M x 64-d (23.4s vs 18.6s
+# map-side combine and 13.5s hof) and was dropped
+# (BENCH/ab_embedding_r5.json).
 BUILDER = "arrow"
+
+
+def _kernel(builder: str) -> bool:
+    """True for the Arrow kernel builder, False for the HOF reference;
+    any other name raises."""
+    if builder not in ("arrow", "hof"):
+        raise ValueError(f"unknown builder {builder!r}")
+    return builder == "arrow"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -131,13 +143,11 @@ def _dist2_kernel(a: "pd.Series", b: "pd.Series") -> "pd.Series":
 
 
 def _cos(a: Column, b: Column, builder: str) -> Column:
-    # "pairs" = the explicit pairwise form with the Arrow kernel (kept
-    # for A/B against the map-combine brute force); "hof" = Catalyst
-    return _cosine_kernel(a, b) if builder in ("arrow", "pairs") else cosine(a, b)
+    return _cosine_kernel(a, b) if _kernel(builder) else cosine(a, b)
 
 
 def _d2(a: Column, b: Column, builder: str) -> Column:
-    return _dist2_kernel(a, b) if builder in ("arrow", "pairs") else _dist2(a, b)
+    return _dist2_kernel(a, b) if _kernel(builder) else _dist2(a, b)
 
 
 def cast_embeddings(df: DataFrame) -> DataFrame:
@@ -223,7 +233,7 @@ def brute_force_topk(
 
 
 def brute_force_topk_df(emb: DataFrame, builder: str = BUILDER) -> DataFrame:
-    if builder == "arrow":
+    if _kernel(builder):
         # map-side-combine form (r5): the scalable brute-force shape.
         # NB it is ~1.4x SLOWER locally than the crossJoin+HOF form at
         # 1M x 64-d (18.6s vs 13.5s, BENCH/ab_embedding_r5.json) and
@@ -390,7 +400,7 @@ def _bucket_kernel(n_planes: int):
 
 
 def _bucket(emb: Column, builder: str, n_planes: int = N_PLANES) -> Column:
-    if builder == "arrow":
+    if _kernel(builder):
         return _bucket_kernel(n_planes)(emb)
     return lsh_bucket(emb, n_planes)
 
@@ -1074,7 +1084,7 @@ def embedding_quality(df: DataFrame, vec_col: str = "embedding",
     fold order, so norms compare bit-stable after rounding); 'hof' is
     the literal Catalyst mirror of the SQL oracle."""
     v = F.col(vec_col)
-    if builder == "arrow":
+    if _kernel(builder):
         staged = df.select(
             F.col(id_col), F.size(v).alias("dim"),
             _quality_kernel(v).alias("_q"),

@@ -14,30 +14,25 @@ Key insight: a position p is inside SOME duplicated substring of length
 >= k  <=>  some k-char window covering p is duplicated  <=>  p lies in
 the union of duplicated k-windows.  So span detection needs only
 equality of fixed k-char window contents — never a full suffix sort —
-and three interchangeable equality keys are offered:
+and two equality keys are offered:
 
 - ``method='literal'``: the window text itself.  Exact, provably equal
   to the DuckDB oracle; shuffles k-char strings (the ~50x corpus wire
   cost is why it is the audit/oracle twin, not the production default).
-- ``method='hash'``: ``xxhash64`` of the window.  One narrow projection,
-  8-byte shuffle keys — the production path at 100 TB, with the same
-  2^-64-collision stance as the repo's md5 digests (expected spurious
-  window merges ~= W^2/2^65; at W = 10^12 windows that is ~0.03 falsely
-  merged window CONTENTS corpus-wide, each of which still needs the
-  other dedup gates to matter).
-- ``method='rank'``: distributed prefix-doubling (the suffix-array
-  construction step, Manber-Myers style, expressed as DataFrame rounds):
-  every position gets an integer equivalence-class id for its B-char
-  block, classes double (r_2d[p] <=> (r_d[p], r_d[p+d])) until d >= k/2,
-  and the exact-k key is the overlapped pair (r_d[p], r_d[p+k-d]).
-  Exact with NO collision assumption and shuffle keys that stay two
-  longs regardless of k — the scale path when k is large (code dedup at
-  k in the hundreds) or when collision-free audit output is required.
-  Cost: ceil(log2(k/B)) + 1 relabel rounds, each a groupBy + join over
-  the position table.
+- ``method='rolling'``: a 64-bit Rabin-Karp hash of the window, computed
+  for every window in one O(N) numpy pass per Arrow batch (see
+  _rolling_keys).  8-byte shuffle keys — the production path, with the
+  same 2^-64-collision stance as the repo's md5 digests (expected
+  spurious window merges ~= W^2/2^65; at W = 10^12 windows that is
+  ~0.03 falsely merged window CONTENTS corpus-wide, each of which still
+  needs the other dedup gates to matter).
 
-All three produce identical spans (pinned in tests/test_suffix.py); the
-literal form backs the DuckDB oracle rows.
+Both produce identical spans (pinned in tests/test_suffix.py); the
+literal form backs the DuckDB oracle rows.  A per-window xxhash64
+projection measured 66-83s against the rolling kernel's 9.4-13.2s on
+35M windows of page docs, and a collision-free prefix-doubling key
+paid one groupBy + join per doubling round; no caller selected either,
+and both were dropped (ROUND5.md item 19).
 
 Scale shape: the position table is one row per character (the grain's
 inherent cost — Lee et al. pay the same via suffix arrays over the
@@ -56,7 +51,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 K_CHARS = 50        # Lee et al. 2022 use 50 (bytes; chars here — see note)
-RANK_BLOCK = 16     # initial literal block width for method='rank'
 
 # Unicode note: Spark's length/substring and DuckDB's length/substr both
 # count CHARACTERS of the decoded string, so char grain (not byte grain)
@@ -73,36 +67,14 @@ def _positions(df: DataFrame, id_col: str, text_col: str, upto: Column) -> DataF
     )
 
 
-def _relabel(
-    keyed: DataFrame, key_cols: list[str], id_col: str, out: str
-) -> DataFrame:
-    """Replace the key tuple with one equivalence-class id: the class's
-    minimal (id, pos) member as a struct.  Equality-preserving is all
-    prefix-doubling needs (classes are consulted only through ``=``),
-    and the canonical-member id is DETERMINISTIC under recomputation —
-    the ranked lineage is consumed by two DAG branches per round, where
-    a ``monotonically_increasing_id`` could relabel the branches
-    differently after a shuffle reorders rows.  No dense global rank,
-    no global sort, no single-reducer window: one partial-agg shuffle
-    + one join per round, and structs compare/group like atomic keys."""
-    classes = keyed.groupBy(*key_cols).agg(
-        F.min(F.struct(id_col, "pos")).alias("__cls")
-    )
-    return (
-        keyed.join(classes, key_cols)
-        .drop(*key_cols)
-        .withColumnRenamed("__cls", out)
-    )
-
-
 def _rolling_keys(
     df: DataFrame, id_col: str, text_col: str, k: int, anchor_mod: int = 1
 ) -> DataFrame:
     """(id, pos, key): vectorized Rabin-Karp — every k-window's 64-bit
     polynomial hash in ONE O(N) numpy pass per Arrow batch, vs the
-    'hash' method's O(k*N) per-position substring materialization
-    (measured 66s -> ~8s on 35M windows of page-length docs; no 50-char
-    window strings ever exist).
+    O(k*N) per-position substring materialization of a per-window
+    xxhash64 (measured 66-83s -> 9.4-13.2s on 35M windows of
+    page-length docs; no 50-char window strings ever exist).
 
     Math: codepoints c[i] (utf-32 decode, so positions stay CHAR
     offsets), base B odd => invertible mod 2^64; with pow[i] = B^-i and
@@ -113,7 +85,7 @@ def _rolling_keys(
     (same ragged-range machinery as the gram cutter).  Collision
     stance: non-adversarial 64-bit, same as the repo's xxhash64/md5
     digests (polynomial hashes are weaker adversarially; the 'literal'
-    and 'rank' methods exist for exactness).
+    method exists for exactness).
 
     ``anchor_mod > 1`` pushes the content-defined selection (see
     _anchored) into the kernel: the mask is evaluated on the hash
@@ -194,72 +166,24 @@ def char_window_keys(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = K_CHARS, method: str = "literal", anchor_mod: int = 1,
 ) -> DataFrame:
-    """(id, pos, key...): one row per k-char window start (1-based pos),
+    """(id, pos, key): one row per k-char window start (1-based pos),
     keyed so two rows carry equal keys iff their windows' contents are
-    equal (exactly for 'literal'/'rank'; modulo 64-bit hashing for
-    'hash'/'rolling').  Key columns: ``key`` for literal/hash/rolling,
-    ``key_a``+``key_b`` for rank.  ``anchor_mod > 1`` applies the
-    content-defined selection (see _anchored); the rolling kernel
-    evaluates it BEFORE materializing output rows (~1/s emitted), the
-    other methods filter post-hoc — identical selected sets."""
-    n_pos = F.length(F.col(text_col)) - k + 1
+    equal (exactly for 'literal'; modulo 64-bit hashing for 'rolling').
+    ``anchor_mod > 1`` applies the content-defined selection (see
+    _anchored); the rolling kernel evaluates it BEFORE materializing
+    output rows (~1/s emitted), the literal form filters post-hoc —
+    identical selected sets."""
     if method == "rolling":
         return _rolling_keys(df, id_col, text_col, k, anchor_mod)
-    if method in ("literal", "hash"):
-        win = F.col(text_col).substr(F.col("pos"), F.lit(k))
-        key = F.xxhash64(win) if method == "hash" else win
-        keys = (
-            _positions(df.filter(F.length(text_col) >= k), id_col, text_col, n_pos)
-            .select(id_col, "pos", key.alias("key"))
-        )
-        return _anchored(keys, method, anchor_mod)
-    if method != "rank":
+    if method != "literal":
         raise ValueError(f"unknown method {method!r}")
-    if anchor_mod > 1:
-        raise ValueError(
-            "anchor_mod needs a content-defined key; method 'rank' "
-            "has run-relative keys"
-        )
-
-    # prefix doubling: ranks over ALL positions 1..len (doubling consults
-    # r_d at p+d for p beyond the window universe; blocks consulted by
-    # any valid k-window are always full — truncated end-of-doc blocks
-    # only feed positions no valid window reads)
-    b = min(RANK_BLOCK, k)
-    pos = _positions(df, id_col, text_col, F.length(F.col(text_col))).select(
-        id_col, "pos",
-        F.col(text_col).substr(F.col("pos"), F.lit(b)).alias("_blk"),
+    n_pos = F.length(F.col(text_col)) - k + 1
+    win = F.col(text_col).substr(F.col("pos"), F.lit(k))
+    keys = (
+        _positions(df.filter(F.length(text_col) >= k), id_col, text_col, n_pos)
+        .select(id_col, "pos", win.alias("key"))
     )
-    ranked = _relabel(pos, ["_blk"], id_col, "r")
-    sentinel = F.struct(
-        F.lit(-1).cast("long").alias(id_col), F.lit(-1).alias("pos")
-    )
-    d = b
-    while 2 * d < k:
-        shifted = ranked.select(
-            F.col(id_col), (F.col("pos") - d).alias("pos"),
-            F.col("r").alias("_r2"),
-        )
-        paired = ranked.join(shifted, [id_col, "pos"], "left").select(
-            id_col, "pos", "r", F.coalesce("_r2", sentinel).alias("_r2")
-        )
-        ranked = _relabel(paired, ["r", "_r2"], id_col, "r")
-        d *= 2
-    # exact-k key: overlapped block pair (r_d[p], r_d[p + k - d]); d >= k/2
-    # so the two blocks cover [p, p+k) exactly
-    off = k - d
-    shifted = ranked.select(
-        F.col(id_col), (F.col("pos") - off).alias("pos"),
-        F.col("r").alias("key_b"),
-    )
-    return (
-        ranked.join(shifted, [id_col, "pos"])
-        .join(
-            df.select(F.col(id_col), n_pos.alias("_np")), id_col
-        )
-        .filter(F.col("pos") <= F.col("_np"))
-        .select(id_col, "pos", F.col("r").alias("key_a"), "key_b")
-    )
+    return _anchored(keys, method, anchor_mod)
 
 
 def _anchored(keys: DataFrame, method: str, anchor_mod: int) -> DataFrame:
@@ -271,11 +195,8 @@ def _anchored(keys: DataFrame, method: str, anchor_mod: int) -> DataFrame:
     batch/incremental equivalence, and the oracle all survive the
     pruning unchanged; only the detection floor moves (see
     char_state_update).  'literal' selects on the md5-hex->BIGINT
-    idiom the export oracle proved bit-identical in DuckDB; the int
-    key methods select on the key itself (already a content hash).
-    'rank' is refused: its class ids are run-relative equivalence
-    labels, not content hashes — the same content gets different ids
-    in different runs, which breaks content-defined selection."""
+    idiom the export oracle proved bit-identical in DuckDB; 'rolling'
+    selects on the key itself (already a content hash)."""
     if anchor_mod <= 1:
         return keys
     if method == "literal":
@@ -283,13 +204,8 @@ def _anchored(keys: DataFrame, method: str, anchor_mod: int) -> DataFrame:
             F.conv(F.substring(F.md5(F.col("key")), 1, 15), 16, 10)
             .cast("long") % anchor_mod == 0
         )
-    elif method in ("hash", "rolling"):
+    else:  # rolling
         sel = F.pmod(F.col("key"), F.lit(anchor_mod)) == 0
-    else:
-        raise ValueError(
-            f"anchor_mod needs a content-defined key; method {method!r} "
-            "has run-relative keys"
-        )
     return keys.filter(sel)
 
 
@@ -341,10 +257,9 @@ def char_span_duplicates(
     # is O(N) and the upstream collapse exchange is shared, so the
     # double derivation stays.
     keys = char_window_keys(df, id_col, text_col, k, method, anchor_mod)
-    kc = ["key_a", "key_b"] if method == "rank" else ["key"]
-    owners = keys.groupBy(*kc).agg(F.min(id_col).alias("_owner"))
+    owners = keys.groupBy("key").agg(F.min(id_col).alias("_owner"))
     flagged = (
-        keys.join(owners, kc)
+        keys.join(owners, "key")
         .filter(F.col(id_col) > F.col("_owner"))
         .select(id_col, "pos")
     )
@@ -436,12 +351,10 @@ def char_state_update(
     slice against FINAL state equals the batch spans restricted to it.
     ``state_in=None`` bootstraps; no-op if ``state_out`` is already
     complete (kill/re-submit safe, the line/simhash state pattern).
-    Content-keyed methods only ('rolling'/'hash'/'literal'): 'rank'
-    class ids are run-relative and cannot key cross-run state.
 
     State-size dial (the reason this grain needs one: at one row per
     char window, exact state is corpus-scale — ~16 B/window for the
-    int-key methods, 1e14 rows at 100 TB).  ``anchor_mod=s`` keeps
+    rolling int key, 1e14 rows at 100 TB).  ``anchor_mod=s`` keeps
     only windows whose content hash is 0 mod s (see _anchored): state
     shrinks ~s-fold and a duplicated substring of length L is missed
     with probability (1 - 1/s)^(L - k + 1) — about e^-t for
@@ -481,9 +394,6 @@ def char_state_merge(
     (bench prices it; tests compare it).  One narrow keying pass over
     the new slice's text, one key-keyed partial aggregation for the
     per-slice owners, one more for the merge against state."""
-    if method == "rank":
-        raise ValueError("method 'rank' has run-relative keys; "
-                         "use 'rolling', 'hash' or 'literal'")
     keys = char_window_keys(new_df, id_col, text_col, k, method, anchor_mod)
     fresh = keys.groupBy("key").agg(F.min(id_col).alias("owner"))
     if state_in is not None:
