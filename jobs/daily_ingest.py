@@ -24,10 +24,11 @@ shape when new docs get new ids; the e2e test pins this equivalence).
 For out-of-order arrivals the per-family retro-clean contract applies
 (see tests/test_suffix_incremental.py, lines.py).
 
-Replay safety: every state write is _SUCCESS-guarded by its family; a
-_DONE marker guards the whole day, so a killed run re-submitted by a
-scheduler resumes at the first unfinished artifact and a completed day
-is a no-op.  The manifest records the slice filter + per-stage counts
+Replay safety: every state write and cleaned artifact is guarded by
+``xjs.pipeline.state.complete`` (its _SUCCESS markers); a _DONE marker
+guards the whole day, so a killed run re-submitted by a scheduler
+resumes at the first unfinished artifact and a completed day is a
+no-op.  The manifest records the slice filter + per-stage counts
 (the per-partition lineage + metrics story at day grain).
 
 Example (day 1 of 3, ordered ingestion):
@@ -47,10 +48,6 @@ import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-def _done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def main() -> None:
@@ -76,6 +73,7 @@ def main() -> None:
         line_page_transform,
         line_state_update,
     )
+    from xjs.pipeline.state import complete
     from xjs.pipeline.suffix import (
         char_dedup_remove,
         char_duplicates_from_state,
@@ -109,7 +107,7 @@ def main() -> None:
             spark, sl, p_lines,
             os.path.join(prev, "lines") if prev else None,
         )
-        if not _done(p_lc):
+        if not complete(p_lc):
             dups = duplicated_from_state(spark, p_lines)
             line_dedup_remove(sl, dups=dups).select(
                 "doc_id", F.col("clean_text").alias("text")
@@ -122,7 +120,7 @@ def main() -> None:
             os.path.join(prev, "chars") if prev else None,
             anchor_mod=args.anchor_mod,
         )
-        if not _done(p_clean):
+        if not complete(p_clean):
             spans = char_duplicates_from_state(
                 spark, lc, p_chars, anchor_mod=args.anchor_mod
             )

@@ -124,7 +124,7 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         from xjs.pipeline.dedup import dedup_corpus, minhash_signature
-        from xjs.pipeline.incremental import _mh_bands, _mh_pairs
+        from xjs.pipeline.incremental import _mh_pairs
 
         corpus = dedup_corpus(spark, sf_dir)
 
@@ -140,7 +140,7 @@ def main() -> None:
             )
 
         ns, hs = sigs(0), sigs(1)
-        return _mh_pairs(_mh_bands(ns, "id"), _mh_bands(hs, "id"), ns, hs)
+        return _mh_pairs(ns, hs)
 
     qs["dedup_minhash_incremental (fold candidates)"] = _mh_fold_df
     picks.append("dedup_minhash_incremental (fold candidates)")

@@ -1,7 +1,10 @@
 """Checkpoint/resume: kill-and-resume equivalence, idempotent re-run."""
 
+import importlib.util
+import json
 import os
 import shutil
+import sys
 import tempfile
 
 import pytest
@@ -12,11 +15,13 @@ from xjs.flagship import compile_plan
 from xjs.runtime import violations
 from xjs.sources.webpages import webpages
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture()
 def out_dir():
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    d = tempfile.mkdtemp(prefix="xjs-ckpt-", dir="/root/repo/.tmp")
+    os.makedirs(os.path.join(REPO, ".tmp"), exist_ok=True)
+    d = tempfile.mkdtemp(prefix="xjs-ckpt-", dir=os.path.join(REPO, ".tmp"))
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -77,28 +82,58 @@ def test_reprocessing_partition_is_idempotent(spark, sf_dir, out_dir):
     assert run2.violations().count() == n1
 
 
-def test_resume_with_quarantine_sinks(spark, sf_dir, out_dir):
-    """Kill-and-resume with quarantine=True: after resume the clean and
-    dirty sinks equal the single-shot quarantine on the full table."""
+def _job_main(name):
+    """``main`` of ``jobs/<name>.py`` (a script, not a package module)."""
+    spec = importlib.util.spec_from_file_location(
+        f"job_{name}", os.path.join(REPO, "jobs", f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.main
+
+
+def test_validate_job_resumes_with_quarantine(spark, sf_dir, out_dir, monkeypatch, capsys):
+    """jobs/validate_webpages.py ``main()`` resuming an interrupted
+    CheckpointedRun into the same --out with --quarantine: only the
+    remaining partitions run, the clean and dirty sinks equal the
+    single-shot ``runtime.quarantine`` over the whole table, and the
+    XJS_SUMMARY key set is pinned."""
     from xjs.runtime import quarantine
 
     wp = webpages(spark, sf_dir)
     plan = compile_plan(wp)
+    CheckpointedRun(spark, out_dir, run_id="vq1").run(
+        wp.filter(F.col("partition_id") < 8), plan)
 
-    first_half = wp.filter(F.col("partition_id") < 8)
-    r1 = CheckpointedRun(spark, out_dir, run_id="rq1")
-    r1.run(first_half, plan, quarantine=True)
-
-    r2 = CheckpointedRun(spark, out_dir, run_id="rq2")
-    rep = r2.run(wp, plan, quarantine=True)
-    assert rep.partitions_skipped == 8
+    main = _job_main("validate_webpages")
+    monkeypatch.setattr(sys, "argv", [
+        "validate_webpages.py", "--input", sf_dir, "--out", out_dir,
+        "--run-id", "vq2", "--quarantine"])
+    main()
+    out = capsys.readouterr().out
+    line = [ln for ln in out.splitlines() if ln.startswith("XJS_SUMMARY ")][-1]
+    summary = json.loads(line.split(" ", 1)[1])
+    assert set(summary) == {
+        "run_id", "partitions_total", "partitions_skipped",
+        "partitions_processed", "n_violations", "n_clean", "n_quarantined",
+        "engine_checks", "wall_sec",
+    }
+    assert set(summary["engine_checks"]) == {
+        "duplicate_urls", "referential_violations", "max_psi",
+        "out_of_order_ts", "stats_partitions",
+    }
+    assert (summary["run_id"], summary["partitions_skipped"],
+            summary["partitions_processed"]) == ("vq2", 8, 8)
+    assert summary["n_violations"] == violations(wp, plan).count()
 
     b_clean, b_dirty = quarantine(wp, plan)
-    s_clean, s_dirty = r2.clean(), r2.dirty()
-    assert s_clean.count() == b_clean.count()
-    assert s_clean.select(*b_clean.columns).exceptAll(b_clean).count() == 0
-    assert s_dirty.count() == b_dirty.count()
-    assert s_dirty.select(*b_dirty.columns).exceptAll(b_dirty).count() == 0
+    s_clean = spark.read.parquet(f"{out_dir}/clean")
+    s_dirty = spark.read.parquet(f"{out_dir}/dirty")
+    for got, want, key in ((s_clean, b_clean, "n_clean"),
+                           (s_dirty, b_dirty, "n_quarantined")):
+        got = got.select(*want.columns)
+        assert summary[key] == got.count() == want.count()
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
 
 def test_missing_manifest_reads_empty(spark, out_dir):

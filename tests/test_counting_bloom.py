@@ -4,6 +4,7 @@ bit, folds must be exact and order-insensitive, saturation must be
 sticky (false-positive-only failure direction), underflow must raise,
 and the retraction query must stay EXACT through the verify join."""
 
+import glob
 import os
 
 import numpy as np
@@ -21,6 +22,7 @@ from xjs.pipeline.bloom import (
     q_bloom_novel_retraction,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_SLOTS = 1 << 15
 K = 5
 
@@ -162,6 +164,16 @@ def test_retraction_query_matches_exact_semantics(spark, sf_dir):
     assert got == want
     # retracted-and-recrawled urls really are novel again
     assert any(d % 10 == 0 for d, _ in got)
+
+
+def test_retraction_query_leaves_no_state_dir(spark, sf_dir):
+    """The query's counting-bloom state dirs are scratch: they are gone
+    once it returns, and its result (which holds the counters in
+    memory) still evaluates."""
+    pattern = os.path.join(REPO, ".tmp", "cbloom-*")
+    before = set(glob.glob(pattern))
+    assert q_bloom_novel_retraction(spark, sf_dir).count() > 0
+    assert set(glob.glob(pattern)) == before
 
 
 def test_partials_sparse_and_dense_paths_agree_with_reference(spark, keys):

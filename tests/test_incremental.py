@@ -175,7 +175,7 @@ def test_minhash_incremental_matches_batch(spark, sf_dir, tmp_state):
 
     corpus = dedup_corpus(spark, sf_dir)
     final = _mh_replay(spark, corpus, tmp_state)
-    got = _rows(inc.minhash_survivors(spark, final))
+    got = _rows(inc.survivors(spark, final))
 
     uniq = corpus.groupBy(F.md5("text").alias("dig")).agg(
         F.min("doc_id").alias("rep"), F.any_value("text").alias("text")
@@ -284,10 +284,10 @@ def test_minhash_old_components_merge_through_new_doc(spark, tmp_state, monkeypa
     day1 = spark.createDataFrame([(3, "textC")], "doc_id long, text string")
     s0, s1 = os.path.join(tmp_state, "s0"), os.path.join(tmp_state, "s1")
     inc.minhash_incremental_update(spark, day0, s0)
-    assert _rows(inc.minhash_survivors(spark, s0)) == [(1, 1), (2, 1)]  # separate
+    assert _rows(inc.survivors(spark, s0)) == [(1, 1), (2, 1)]  # separate
     inc.minhash_incremental_update(spark, day1, s1, s0)
-    assert _rows(inc.minhash_survivors(spark, s1)) == [(1, 3)]  # merged via C
-    _, sigs, _ = inc.load_minhash_state(spark, s1)
+    assert _rows(inc.survivors(spark, s1)) == [(1, 3)]  # merged via C
+    _, sigs, _ = inc.load_state(spark, s1)
     assert {r.root for r in sigs.collect()} == {1}
 
 
@@ -315,7 +315,7 @@ def test_minhash_band_without_agreement_is_rejected(spark, tmp_state, monkeypatc
     s0, s1 = os.path.join(tmp_state, "s0"), os.path.join(tmp_state, "s1")
     inc.minhash_incremental_update(spark, day0, s0)
     inc.minhash_incremental_update(spark, day1, s1, s0)
-    assert _rows(inc.minhash_survivors(spark, s1)) == [(1, 1), (2, 1)]
+    assert _rows(inc.survivors(spark, s1)) == [(1, 1), (2, 1)]
 
 
 def test_minhash_survivor_min_doc_and_seen_skip(spark, tmp_state):
@@ -327,8 +327,8 @@ def test_minhash_survivor_min_doc_and_seen_skip(spark, tmp_state):
     s0, s1 = os.path.join(tmp_state, "s0"), os.path.join(tmp_state, "s1")
     inc.minhash_incremental_update(spark, day0, s0)
     inc.minhash_incremental_update(spark, day1, s1, s0)
-    assert _rows(inc.minhash_survivors(spark, s1)) == [(7, 2)]
-    digests, sigs, members = inc.load_minhash_state(spark, s1)
+    assert _rows(inc.survivors(spark, s1)) == [(7, 2)]
+    digests, sigs, members = inc.load_state(spark, s1)
     assert [r.rep_id for r in digests.collect()] == [30]
     assert sigs.count() == 1
     assert members.count() == 2

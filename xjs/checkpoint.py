@@ -61,8 +61,6 @@ class CheckpointedRun:
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.manifest_path = f"{self.out_dir}/manifest"
         self.violations_path = f"{self.out_dir}/violations"
-        self.clean_path = f"{self.out_dir}/clean"
-        self.dirty_path = f"{self.out_dir}/dirty"
 
     # -- manifest ------------------------------------------------------------
 
@@ -88,7 +86,6 @@ class CheckpointedRun:
         df: DataFrame,
         plan: CheckPlan,
         batches: int = 1,
-        quarantine: bool = False,
     ) -> ResumeReport:
         """Validate ``df`` partition-incrementally.
 
@@ -96,13 +93,6 @@ class CheckpointedRun:
         commit separately (each group = one scan restricted by
         partition pruning + one manifest append), bounding lost work
         on failure.
-
-        ``quarantine=True`` additionally routes each group's rows into
-        ``<out>/clean`` (input schema) and ``<out>/dirty`` sinks under
-        the SAME commit protocol: all sinks land via idempotent dynamic
-        partition overwrite BEFORE the group's manifest append, so a
-        crash between writes re-runs the partition and atomically
-        replaces every sink's output for it.
         """
         part_col = plan.partition_col
         assert part_col, "checkpointing requires a partition column"
@@ -132,21 +122,6 @@ class CheckpointedRun:
                     .partitionBy("partition_id")
                     .parquet(self.violations_path)
                 )
-                # 1b. optional quarantine routing, same idempotent shape
-                if quarantine:
-                    from xjs.runtime import quarantine as _quarantine
-
-                    clean, dirty = _quarantine(sub, plan)
-                    (
-                        clean.write.mode("overwrite")
-                        .partitionBy(part_col)
-                        .parquet(self.clean_path)
-                    )
-                    (
-                        dirty.write.mode("overwrite")
-                        .partitionBy("partition_id")
-                        .parquet(self.dirty_path)
-                    )
                 # 2. manifest append = commit point
                 vd = _verdicts(sub, plan)
                 manifest_rows = vd.select(
@@ -179,12 +154,6 @@ class CheckpointedRun:
 
     def violations(self) -> DataFrame:
         return self.spark.read.parquet(self.violations_path)
-
-    def clean(self) -> DataFrame:
-        return self.spark.read.parquet(self.clean_path)
-
-    def dirty(self) -> DataFrame:
-        return self.spark.read.parquet(self.dirty_path)
 
     def metrics(self) -> DataFrame:
         return self.read_manifest()

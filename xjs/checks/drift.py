@@ -36,6 +36,23 @@ def histogram(df: DataFrame, value: Column, partition_col: str,
     )
 
 
+def _spine_join(part_hist: DataFrame, base_hist: DataFrame, partition_col: str,
+                n_buckets: int) -> DataFrame:
+    """(partition, bucket, n_p, n_q) over a dense partition × bucket
+    spine, so buckets missing on either side read 0."""
+    p = part_hist.withColumnRenamed("n", "n_p")
+    q = base_hist.withColumnRenamed("n", "n_q")
+    spine = (
+        p.select(partition_col).distinct()
+        .crossJoin(part_hist.sparkSession.range(n_buckets).select(F.col("id").cast("int").alias("bucket")))
+    )
+    return (
+        spine.join(p, [partition_col, "bucket"], "left")
+        .join(F.broadcast(q), ["bucket"], "left")
+        .fillna(0, ["n_p", "n_q"])
+    )
+
+
 def psi(part_hist: DataFrame, base_hist: DataFrame, partition_col: str,
         n_buckets: int) -> DataFrame:
     """Population Stability Index of each partition vs the baseline.
@@ -43,18 +60,7 @@ def psi(part_hist: DataFrame, base_hist: DataFrame, partition_col: str,
     psi = Σ_b (p_b - q_b) * ln(p_b / q_b), with EPS-smoothed
     probabilities so empty buckets are defined.
     """
-    p = part_hist.withColumnRenamed("n", "n_p")
-    q = base_hist.withColumnRenamed("n", "n_q")
-    # dense bucket spine per partition so missing buckets smooth to EPS
-    spine = (
-        p.select(partition_col).distinct()
-        .crossJoin(part_hist.sparkSession.range(n_buckets).select(F.col("id").cast("int").alias("bucket")))
-    )
-    j = (
-        spine.join(p, [partition_col, "bucket"], "left")
-        .join(F.broadcast(q), ["bucket"], "left")
-        .fillna(0, ["n_p", "n_q"])
-    )
+    j = _spine_join(part_hist, base_hist, partition_col, n_buckets)
     tot = Window.partitionBy(partition_col)
     pp = (F.col("n_p") + EPS) / (F.sum("n_p").over(tot) + EPS * n_buckets)
     # within one partition's spine each bucket appears once, so the
@@ -71,18 +77,8 @@ def psi(part_hist: DataFrame, base_hist: DataFrame, partition_col: str,
 def ks(part_hist: DataFrame, base_hist: DataFrame, partition_col: str,
        n_buckets: int) -> DataFrame:
     """Kolmogorov–Smirnov statistic from bucketed CDFs (the KS at this
-    bucket resolution).  Same dense-spine construction as psi()."""
-    p = part_hist.withColumnRenamed("n", "n_p")
-    q = base_hist.withColumnRenamed("n", "n_q")
-    spine = (
-        p.select(partition_col).distinct()
-        .crossJoin(part_hist.sparkSession.range(n_buckets).select(F.col("id").cast("int").alias("bucket")))
-    )
-    j = (
-        spine.join(p, [partition_col, "bucket"], "left")
-        .join(F.broadcast(q), ["bucket"], "left")
-        .fillna(0, ["n_p", "n_q"])
-    )
+    bucket resolution), over the same dense spine as psi()."""
+    j = _spine_join(part_hist, base_hist, partition_col, n_buckets)
     w = Window.partitionBy(partition_col).orderBy("bucket")
     tot = Window.partitionBy(partition_col)
     cdf_p = F.sum("n_p").over(w) / F.sum("n_p").over(tot)

@@ -38,6 +38,8 @@ bloom survivors.  Skew-immune: no key ever groups rows together.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -45,6 +47,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xjs.pipeline import state
 
 BLOOM_SALT = 0x5F3D  # second xxhash64 lane
 CHUNK_WORDS = 8192   # 64 KiB per emitted bitmap chunk row
@@ -294,10 +298,36 @@ WHERE NOT EXISTS (SELECT 1 FROM hist h WHERE h.url = n.url)
 BLOOM_STATE_VERSION = 1
 
 
-def _state_file(state_dir: str) -> str:
-    import os
+def _blob(state_dir: str, name: str) -> bytes:
+    with open(os.path.join(state_dir, f"{name}.bin"), "rb") as fh:
+        return fh.read()
 
-    return os.path.join(state_dir, "bloom.bin")
+
+def _meta(state_dir: str, name: str) -> dict:
+    with open(os.path.join(state_dir, f"{name}.meta.json")) as fh:
+        return json.load(fh)
+
+
+def _prev_blob(prev_state_dir: str, name: str, params: dict) -> bytes:
+    """The previous day's ``<name>.bin``, once its meta matches
+    ``params`` and the current state version."""
+    meta = _meta(prev_state_dir, name)
+    want = {**params, "version": BLOOM_STATE_VERSION}
+    if meta != want:
+        raise ValueError(
+            f"{name} state params changed ({meta} vs {want}): rebuild "
+            "from the key registry instead of folding"
+        )
+    return _blob(prev_state_dir, name)
+
+
+def _commit(state_dir: str, name: str, blob: bytes, params: dict) -> None:
+    """Write blob, then meta, then the _SUCCESS marker."""
+    with open(os.path.join(state_dir, f"{name}.bin"), "wb") as fh:
+        fh.write(blob)
+    with open(os.path.join(state_dir, f"{name}.meta.json"), "w") as fh:
+        json.dump({**params, "version": BLOOM_STATE_VERSION}, fh)
+    state.mark_complete(state_dir)
 
 
 def bloom_state_update(
@@ -323,52 +353,25 @@ def bloom_state_update(
     part of the state contract (mismatched params raise — resizing
     means a one-time rebuild from the key registry).  _SUCCESS-guarded
     like every other state family: a replayed day is a no-op."""
-    import json
-    import os
-
-    done = os.path.join(state_dir, "_SUCCESS")
-    if os.path.exists(done):
-        with open(_state_file(state_dir), "rb") as fh:
-            return fh.read()
+    if state.complete(state_dir):
+        return _blob(state_dir, "bloom")
     os.makedirs(state_dir, exist_ok=True)
+    params = {"n_bits": n_bits, "k": k}
     words = np.frombuffer(
         bloom_build(new_df, key_col, n_bits=n_bits, k=k), dtype=np.uint64
     ).copy()
     if prev_state_dir is not None:
-        meta_p = os.path.join(prev_state_dir, "bloom.meta.json")
-        with open(meta_p) as fh:
-            meta = json.load(fh)
-        if (meta["n_bits"], meta["k"], meta["version"]) != (
-            n_bits, k, BLOOM_STATE_VERSION
-        ):
-            raise ValueError(
-                f"bloom state params changed ({meta} vs n_bits={n_bits} "
-                f"k={k} v{BLOOM_STATE_VERSION}): rebuild from the key "
-                "registry instead of folding"
-            )
-        with open(_state_file(prev_state_dir), "rb") as fh:
-            prev = np.frombuffer(fh.read(), dtype=np.uint64)
-        words |= prev
+        words |= np.frombuffer(
+            _prev_blob(prev_state_dir, "bloom", params), dtype=np.uint64)
     blob = words.tobytes()
-    with open(_state_file(state_dir), "wb") as fh:
-        fh.write(blob)
-    with open(os.path.join(state_dir, "bloom.meta.json"), "w") as fh:
-        json.dump({"n_bits": n_bits, "k": k,
-                   "version": BLOOM_STATE_VERSION}, fh)
-    with open(done, "w") as fh:
-        fh.write("")
+    _commit(state_dir, "bloom", blob, params)
     return blob
 
 
 def bloom_from_state(state_dir: str) -> tuple[bytes, int, int]:
     """(words, n_bits, k) from a completed state dir."""
-    import json
-    import os
-
-    with open(os.path.join(state_dir, "bloom.meta.json")) as fh:
-        meta = json.load(fh)
-    with open(_state_file(state_dir), "rb") as fh:
-        return fh.read(), meta["n_bits"], meta["k"]
+    meta = _meta(state_dir, "bloom")
+    return _blob(state_dir, "bloom"), meta["n_bits"], meta["k"]
 
 
 # ---------------------------------------------------------------------------
@@ -508,12 +511,6 @@ def counting_to_bits(counters: np.ndarray) -> bytes:
     return bits.tobytes()
 
 
-def _counting_file(state_dir: str) -> str:
-    import os
-
-    return os.path.join(state_dir, "counting.bin")
-
-
 def counting_state_update(
     spark: SparkSession,
     add_df: DataFrame | None,
@@ -532,34 +529,16 @@ def counting_state_update(
     (prev == 255) are carried unchanged; an unsaturated cell driven
     negative raises (delete-of-absent-key detected).  _SUCCESS-guarded:
     a replayed day returns the stored state untouched."""
-    import json
-    import os
-
-    done = os.path.join(state_dir, "_SUCCESS")
-    if os.path.exists(done):
-        with open(_counting_file(state_dir), "rb") as fh:
-            return np.frombuffer(fh.read(), dtype=np.uint8).copy()
+    if state.complete(state_dir):
+        return np.frombuffer(_blob(state_dir, "counting"), dtype=np.uint8).copy()
     os.makedirs(state_dir, exist_ok=True)
+    params = {"n_slots": n_slots, "k": k}
     adds = (counting_build(add_df, key_col, n_slots=n_slots, k=k)
             if add_df is not None else np.zeros(n_slots, dtype=np.uint32))
     rems = (counting_build(remove_df, key_col, n_slots=n_slots, k=k)
             if remove_df is not None else np.zeros(n_slots, dtype=np.uint32))
-    if prev_state_dir is not None:
-        meta_p = os.path.join(prev_state_dir, "counting.meta.json")
-        with open(meta_p) as fh:
-            meta = json.load(fh)
-        if (meta["n_slots"], meta["k"], meta["version"]) != (
-            n_slots, k, BLOOM_STATE_VERSION
-        ):
-            raise ValueError(
-                f"counting state params changed ({meta} vs n_slots={n_slots}"
-                f" k={k} v{BLOOM_STATE_VERSION}): rebuild from the key "
-                "registry instead of folding"
-            )
-        with open(_counting_file(prev_state_dir), "rb") as fh:
-            prev = np.frombuffer(fh.read(), dtype=np.uint8)
-    else:
-        prev = np.zeros(n_slots, dtype=np.uint8)
+    prev = (np.frombuffer(_prev_blob(prev_state_dir, "counting", params), dtype=np.uint8)
+            if prev_state_dir is not None else np.zeros(n_slots, dtype=np.uint8))
     sticky = prev == COUNTER_MAX
     folded = prev.astype(np.int64) + adds.astype(np.int64) \
         - rems.astype(np.int64)
@@ -573,26 +552,15 @@ def counting_state_update(
     folded = np.minimum(folded, COUNTER_MAX)
     folded[sticky] = COUNTER_MAX  # sticky: saturation never decrements
     out = folded.astype(np.uint8)
-    with open(_counting_file(state_dir), "wb") as fh:
-        fh.write(out.tobytes())
-    with open(os.path.join(state_dir, "counting.meta.json"), "w") as fh:
-        json.dump({"n_slots": n_slots, "k": k,
-                   "version": BLOOM_STATE_VERSION}, fh)
-    with open(done, "w") as fh:
-        fh.write("")
+    _commit(state_dir, "counting", out.tobytes(), params)
     return out
 
 
 def counting_from_state(state_dir: str) -> tuple[np.ndarray, int, int]:
     """(counters, n_slots, k) from a completed counting state dir."""
-    import json
-    import os
-
-    with open(os.path.join(state_dir, "counting.meta.json")) as fh:
-        meta = json.load(fh)
-    with open(_counting_file(state_dir), "rb") as fh:
-        return (np.frombuffer(fh.read(), dtype=np.uint8).copy(),
-                meta["n_slots"], meta["k"])
+    meta = _meta(state_dir, "counting")
+    return (np.frombuffer(_blob(state_dir, "counting"), dtype=np.uint8).copy(),
+            meta["n_slots"], meta["k"])
 
 
 # ---------------------------------------------------------------------------
@@ -609,23 +577,18 @@ def q_bloom_novel_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefiltered by the counting-bloom state's binarized form.  Urls in
     the retracted slice (e.g. takedowns) are novel again — exactly
     what the OR-folded bit state cannot express."""
-    import os
-    import tempfile
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     adds = _with_url(d.filter(F.col("doc_id") % HIST_MOD == HIST_RES))
     removes = _with_url(d.filter(F.col("doc_id") % REM_MOD == REM_RES))
     new = _with_url(d.filter(F.col("doc_id") % NEW_MOD == NEW_RES))
     live = adds.join(removes.select("url"), "url", "left_anti")
-    repo = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    base = tempfile.mkdtemp(prefix="cbloom-", dir=os.path.join(repo, ".tmp"))
-    s1 = counting_state_update(       # day 1: the additions
-        spark, adds, None, "url", os.path.join(base, "day1"))
-    del s1
-    counters = counting_state_update(  # day 2: the retractions
-        spark, None, removes, "url", os.path.join(base, "day2"),
-        prev_state_dir=os.path.join(base, "day1"))
+    # the result holds the counters in memory, so the state dirs can go
+    with state.scratch_dir("cbloom-") as base:
+        counting_state_update(  # day 1: the additions
+            spark, adds, None, "url", os.path.join(base, "day1"))
+        counters = counting_state_update(  # day 2: the retractions
+            spark, None, removes, "url", os.path.join(base, "day2"),
+            prev_state_dir=os.path.join(base, "day1"))
     return novel_keys(new, live, "url", bloom=counting_to_bits(counters))
 
 

@@ -21,9 +21,12 @@ threshold.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xjs.pipeline import state
 from xjs.pipeline.text import token_ngrams, tokens
 
 NGRAM = 5
@@ -334,15 +337,6 @@ def boilerplate_flag_and_clean(
 # --------------------------------------------------------------------------
 
 
-def _state_complete(state_dir: str) -> bool:
-    import os
-
-    return all(
-        os.path.exists(os.path.join(state_dir, sub, "_SUCCESS"))
-        for sub in ("grams", "totals")
-    )
-
-
 def boilerplate_state_update(
     spark: SparkSession,
     new_df: DataFrame,
@@ -373,7 +367,7 @@ def boilerplate_state_update(
     corpus — bounds state size, and historical text is never re-read."""
     import os
 
-    if _state_complete(state_out):
+    if state.complete(state_out, "grams", "totals"):
         return
     fresh_g = _per_doc_gram_counts(
         new_df, group_col, text_col, n, edge_tokens, builder
@@ -416,26 +410,10 @@ def q_boilerplate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     through document-frequency state; the oracle recomputes detection
     from the full corpus in one batch (sums of disjoint slices fold
     exactly, so the answers are identical)."""
-    import os
-    import shutil
-    import tempfile
-
     corpus = edge_regime_corpus(spark, sf_dir)
-    scratch = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".tmp")
-    os.makedirs(scratch, exist_ok=True)
-    base = tempfile.mkdtemp(prefix="incr-bp-", dir=scratch)
-    try:
-        prev = None
-        for day in range(3):
-            out = os.path.join(base, f"day{day}")
-            boilerplate_state_update(
-                spark, corpus.filter(F.col("doc_id") % 3 == day), out, prev
-            )
-            prev = out
-        return boilerplate_from_state(spark, prev).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    fold = partial(boilerplate_state_update, spark)
+    with state.replay_slices(corpus, fold, "incr-bp-") as final:
+        return boilerplate_from_state(spark, final).localCheckpoint(eager=True)
 
 
 def oracle_boilerplate_incremental_sql() -> str:

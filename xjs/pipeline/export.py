@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xjs.pipeline.state import mark_complete
+
 N_SHARDS = 16        # hash-mod query default (sf-sized; production: corpus/shard_size)
 SHARD_SIZE = 64      # sized query default (docs per shard)
 SEED = 42
@@ -415,6 +417,5 @@ def write_shards_wet(
 
     for leftover in _glob.glob(os.path.join(path, "shard-*.warc.gz.attempt-*.tmp")):
         os.unlink(leftover)  # temp files of killed/lost attempts
-    with open(os.path.join(path, "_SUCCESS"), "w") as fh:
-        fh.write("")
+    mark_complete(path)
     return manifest

@@ -41,9 +41,12 @@ oracle.
 from __future__ import annotations
 
 import re
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xjs.pipeline import state
 
 MIN_COUNT = 2        # corpus occurrences before a line is "duplicated"
 MIN_CHARS = 6        # shorter lines are never removed (blank lines,
@@ -258,9 +261,7 @@ def line_state_update(
     ``sep`` picks the grain (the paragraph form folds with
     sep=PARA_SEP; the separator is part of the state contract — mixing
     grains in one state dir is caller error)."""
-    import os
-
-    if os.path.exists(os.path.join(state_out, "_SUCCESS")):
+    if state.complete(state_out):
         return
     fresh = _slice_line_stats(new_df, id_col, text_col, min_chars, sep)
     if state_in is not None:
@@ -294,26 +295,10 @@ def q_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the line corpus as three interleaved daily slices
     (doc_id % 3) through incremental state; the oracle recomputes the
     duplicate-line table from the full corpus in one batch."""
-    import os
-    import shutil
-    import tempfile
-
     corpus = line_corpus(spark, sf_dir)
-    base = tempfile.mkdtemp(
-        prefix="incr-lines-", dir=os.path.join(os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))), ".tmp")
-    )
-    try:
-        prev = None
-        for day in range(3):
-            out = os.path.join(base, f"day{day}")
-            line_state_update(
-                spark, corpus.filter(F.col("doc_id") % 3 == day), out, prev
-            )
-            prev = out
-        return duplicated_from_state(spark, prev).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    fold = partial(line_state_update, spark)
+    with state.replay_slices(corpus, fold, "incr-lines-") as final:
+        return duplicated_from_state(spark, final).localCheckpoint(eager=True)
 
 
 def oracle_line_dedup_incremental_sql() -> str:

@@ -47,8 +47,12 @@ splices text in a narrow per-row projection.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xjs.pipeline import state
 
 K_CHARS = 50        # Lee et al. 2022 use 50 (bytes; chars here — see note)
 
@@ -370,9 +374,7 @@ def char_state_update(
     O(chars) rolling pass as the batch path); the merge is one
     key-keyed partial aggregation against state — no historical text
     is ever re-read."""
-    import os
-
-    if os.path.exists(os.path.join(state_out, "_SUCCESS")):
+    if state.complete(state_out):
         return
     char_state_merge(
         spark, new_df, state_in, id_col, text_col, k, method, anchor_mod
@@ -458,31 +460,14 @@ def q_char_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the anchored spans from the full corpus in one
     batch — equality is the retro-clean contract, and the row doubles
     as the oracle proof of the pruned-state selection itself."""
-    import os
-    import shutil
-    import tempfile
-
     from xjs.pipeline.dedup import dedup_corpus
 
     corpus = dedup_corpus(spark, sf_dir)
-    scratch = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".tmp")
-    os.makedirs(scratch, exist_ok=True)
-    base = tempfile.mkdtemp(prefix="incr-char-", dir=scratch)
-    try:
-        prev = None
-        for day in range(3):
-            out = os.path.join(base, f"day{day}")
-            char_state_update(
-                spark, corpus.filter(F.col("doc_id") % 3 == day), out, prev,
-                method="literal", anchor_mod=ANCHOR_MOD,
-            )
-            prev = out
+    fold = partial(char_state_update, spark, method="literal", anchor_mod=ANCHOR_MOD)
+    with state.replay_slices(corpus, fold, "incr-char-") as final:
         return char_duplicates_from_state(
-            spark, corpus, prev, method="literal", anchor_mod=ANCHOR_MOD
+            spark, corpus, final, method="literal", anchor_mod=ANCHOR_MOD
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _char_spans_ctes(anchor_mod: int = 1) -> str:

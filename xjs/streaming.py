@@ -314,6 +314,18 @@ def idempotent_batch_write(batch_df: DataFrame, out_path: str, batch_id: int) ->
     batch_df.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
 
+def _drain(stream_df: DataFrame, route, checkpoint_path: str) -> None:
+    """Run ``route(batch_df, batch_id)`` over every micro-batch of all
+    available input (Trigger.AvailableNow) and wait for the drain."""
+    (
+        stream_df.writeStream.foreachBatch(route)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_quarantine_availablenow(
     stream_df: DataFrame,
     plan: CheckPlan,
@@ -342,13 +354,7 @@ def run_quarantine_availablenow(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, route, checkpoint_path)
 
 
 def run_boilerplate_clean_availablenow(
@@ -386,13 +392,7 @@ def run_boilerplate_clean_availablenow(
             batch_id,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, route, checkpoint_path)
 
 
 def run_line_clean_availablenow(
@@ -432,13 +432,7 @@ def run_line_clean_availablenow(
             batch_id,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, route, checkpoint_path)
 
 
 def run_char_clean_availablenow(
@@ -485,13 +479,7 @@ def run_char_clean_availablenow(
             batch_id,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, route, checkpoint_path)
 
 
 def run_availablenow(
@@ -548,13 +536,7 @@ def run_warc_ingest_availablenow(
         idempotent_batch_write(clean, clean_path, batch_id)
         idempotent_batch_write(quarantine, quarantine_path, batch_id)
 
-    q = (
-        files.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(files, route, checkpoint_path)
 
 
 def run_novelty_gate_availablenow(
@@ -601,10 +583,4 @@ def run_novelty_gate_availablenow(
             out_path, batch_id,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, route, checkpoint_path)
