@@ -17,7 +17,8 @@ Pruning therefore costs no exactness: the backoff path IS the model.
 
     python3 scripts/train_5gram_lm.py          # rewrites the artifact
 
-Retraining is pinned byte-identical in tests/test_lm_5gram.py.
+Retraining is pinned byte-identical by the shared per-order check in
+tests/lm_checks.py, run from tests/test_lm_5gram.py.
 """
 
 from __future__ import annotations

@@ -10,8 +10,9 @@ order-independent and bit-exact across Spark, numpy, and DuckDB.
 
     python3 scripts/train_bigram_lm.py          # rewrites the artifact
 
-Retraining is pinned byte-identical in tests/test_lm.py (same pattern
-as the langid and BPE artifacts).
+Retraining is pinned byte-identical by the shared per-order check in
+tests/lm_checks.py, run from tests/test_lm.py (same pattern as the
+langid and BPE artifacts).
 """
 
 from __future__ import annotations

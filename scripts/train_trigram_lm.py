@@ -13,7 +13,8 @@ integer ADDITION in micro-nat space, so pruning costs no exactness.
 
     python3 scripts/train_trigram_lm.py          # rewrites the artifact
 
-Retraining is pinned byte-identical in tests/test_lm.py.
+Retraining is pinned byte-identical by the shared per-order check in
+tests/lm_checks.py, run from tests/test_lm.py.
 """
 
 from __future__ import annotations

@@ -273,6 +273,9 @@ UNKNOWN_IMPLS = [
     ("gopher", "native"), ("gopher", "nope"),
     ("suffix", "rank"), ("suffix", "hash"), ("suffix", "nope"),
     ("similarity", "pairs"), ("similarity", "nope"),
+    ("boilerplate", "nope"), ("decontam", "nope"),
+    ("quality_model", "nope"), ("vocab", "nope"), ("dedup", "nope"),
+    ("lm", "nope"),
 ]
 
 
@@ -281,21 +284,50 @@ UNKNOWN_IMPLS = [
 )
 def test_unknown_impl_raises(spark, module, name):
     """An unknown implementation name raises instead of silently
-    running some other implementation."""
-    from xjs.pipeline import similarity
+    running some other implementation — at every entry point of the
+    module that takes one."""
+    from xjs.pipeline import (
+        boilerplate,
+        decontam,
+        dedup,
+        lm,
+        quality_model,
+        similarity,
+        vocab,
+    )
     from xjs.pipeline.grams import ngram_rows
     from xjs.pipeline.suffix import char_window_keys
 
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     emb = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, emb array<double>")
-    build = {
-        "grams": lambda: ngram_rows(docs, ["doc_id"], "text", 2, impl=name),
-        "gopher": lambda: H.gopher_features(docs, impl=name),
-        "suffix": lambda: char_window_keys(docs, method=name),
-        "similarity": lambda: similarity.brute_force_topk_df(emb, name),
+    builds = {
+        "grams": [lambda: ngram_rows(docs, ["doc_id"], "text", 2, impl=name)],
+        "gopher": [lambda: H.gopher_features(docs, impl=name)],
+        "suffix": [lambda: char_window_keys(docs, method=name)],
+        "similarity": [lambda: similarity.brute_force_topk_df(emb, name)],
+        "boilerplate": [
+            lambda: boilerplate.boilerplate_grams(docs, "doc_id", builder=name),
+            lambda: boilerplate.boilerplate_remove(docs, docs, "doc_id",
+                                                   builder=name),
+        ],
+        "decontam": [lambda: decontam.doc_grams(docs, builder=name)],
+        "quality_model": [
+            lambda: quality_model.classifier_scores(docs, impl=name)],
+        "vocab": [
+            lambda: vocab.word_frequencies(docs, impl=name),
+            lambda: vocab.tfidf_top_terms(docs, docs, impl=name),
+        ],
+        "dedup": [
+            lambda: dedup.minhash_signature(F.col("text"), name),
+            lambda: dedup.simhash_signatures(docs, name),
+            lambda: dedup.substring_duplicates(docs, hash_mode=name),
+            lambda: dedup.substring_spans(docs, hash_mode=name),
+        ],
+        "lm": [lambda: lm.lm_score(docs, hash_mode=name)],
     }[module]
-    with pytest.raises(ValueError):
-        build()
+    for build in builds:
+        with pytest.raises(ValueError):
+            build()
 
 
 def test_c4_null_text_explicit_drop(spark):

@@ -1,27 +1,23 @@
-"""Bigram-LM perplexity scoring/filtering: pinned artifact retrain,
-handcrafted integer scores, degenerate docs, gate semantics."""
+"""Bigram- and trigram-LM perplexity scoring/filtering: pinned
+artifact retrain, handcrafted integer scores, degenerate docs, gate
+semantics, and the CCNet buckets.  The per-order checks are shared
+with the 5-gram tests (tests/lm_checks.py)."""
 
-import pickle
-
+from lm_checks import (
+    check_gate_drops_exactly_the_noise,
+    check_native_equals_portable,
+    check_native_plan_is_shuffle_free,
+    check_portable_plan_broadcasts,
+    check_retrains_byte_identical,
+)
 from pyspark.sql import functions as F
 
-from xjs.pipeline.lm import DEFAULT_LM, lm_corpus, lm_filter, lm_score
+from xjs.pipeline.lm import DEFAULT_LM, DEFAULT_LM3, lm_filter, lm_score
 from xjs.pipeline.model_artifact import load
 
 
 def test_artifact_retrains_byte_identical():
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "train_bigram_lm",
-        Path(__file__).resolve().parent.parent / "scripts" / "train_bigram_lm.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    retrained = pickle.dumps(mod.train(), protocol=4)
-    committed_model = load(DEFAULT_LM)
-    assert pickle.dumps(committed_model, protocol=4) == retrained
+    check_retrains_byte_identical(2)
 
 
 def test_handcrafted_integer_scores(spark):
@@ -62,39 +58,19 @@ def test_filter_gate_integer_exact(spark):
 
 
 def test_corpus_gate_drops_exactly_the_noise(spark, sf_dir):
-    out = lm_filter(lm_corpus(spark, sf_dir))
-    dropped = {r.doc_id for r in out.filter(~F.col("keep")).collect()}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    noise = {r.doc_id for r in docs.filter(F.col("doc_id") % 9 == 0).collect()}
-    assert dropped == noise and len(noise) > 0
+    check_gate_drops_exactly_the_noise(spark, sf_dir, 2)
 
 
 def test_broadcast_lookup_plan(spark, sf_dir):
-    # portable reference: model table broadcasts, never shuffles corpus
-    plan = (
-        lm_score(lm_corpus(spark, sf_dir), hash_mode="portable")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
+    check_portable_plan_broadcasts(spark, sf_dir, 2)
 
 
 def test_native_kernel_plan_is_shuffle_free(spark, sf_dir):
-    """hash_mode='native' (r6) is one narrow Arrow kernel: no
-    Exchange, no join anywhere in the scorer plan."""
-    plan = (
-        lm_score(lm_corpus(spark, sf_dir))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInArrow" in plan
-    for node in ("Exchange", "Join"):
-        assert node not in plan, node
+    check_native_plan_is_shuffle_free(spark, sf_dir, 2)
 
 
 def test_native_equals_portable_bigram(spark, sf_dir):
-    from pyspark.sql import functions as F
-    a = lm_score(lm_corpus(spark, sf_dir)).collect()
-    b = lm_score(lm_corpus(spark, sf_dir), hash_mode="portable").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    check_native_equals_portable(spark, sf_dir, 2)
 
 
 # --------------------------------------------------------------------------
@@ -103,28 +79,12 @@ def test_native_equals_portable_bigram(spark, sf_dir):
 
 
 def test_trigram_artifact_retrains_byte_identical():
-    import importlib.util
-    import pickle as pk
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "train_trigram_lm",
-        Path(__file__).resolve().parent.parent / "scripts" / "train_trigram_lm.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from xjs.pipeline.lm import DEFAULT_LM3
-
-    assert pk.dumps(mod.train(), protocol=4) == pk.dumps(
-        load(DEFAULT_LM3), protocol=4
-    )
+    check_retrains_byte_identical(3)
 
 
 def test_trigram_backoff_chain_integer_exact(spark):
     """Hand-check the three-way backoff: pruned-trigram hit, bigram
     backoff (+integer alpha), OOV floor — each an exact integer."""
-    from xjs.pipeline.lm import DEFAULT_LM3, lm_score_trigram
-
     model = load(DEFAULT_LM3)
     tri = {(a, b, c): lp for a, b, c, lp in model["trigrams"]}
     bi = {(p, w): lp for p, w, lp in model["bigrams"]}
@@ -145,7 +105,7 @@ def test_trigram_backoff_chain_integer_exact(spark):
     )
     got = {
         r.doc_id: (r.n_transitions, r.lp_sum)
-        for r in lm_score_trigram(df).collect()
+        for r in lm_score(df, DEFAULT_LM3).collect()
     }
     assert got[1] == (1, tri[(a, b, c)])
     assert got[2] == (1, bi[backoff_pair] + model["backoff"])
@@ -154,34 +114,19 @@ def test_trigram_backoff_chain_integer_exact(spark):
 
 
 def test_trigram_gate_drops_exactly_the_noise(spark, sf_dir):
-    from xjs.pipeline.lm import lm_filter_trigram
-
-    out = lm_filter_trigram(lm_corpus(spark, sf_dir))
-    dropped = {r.doc_id for r in out.filter(~F.col("keep")).collect()}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    noise = {r.doc_id for r in docs.filter(F.col("doc_id") % 9 == 0).collect()}
-    assert dropped == noise and len(noise) > 0
+    check_gate_drops_exactly_the_noise(spark, sf_dir, 3)
 
 
 def test_trigram_native_equals_portable(spark, sf_dir):
-    from xjs.pipeline.lm import lm_score_trigram
-
-    corpus = lm_corpus(spark, sf_dir)
-    a = lm_score_trigram(corpus, hash_mode="native")
-    b = lm_score_trigram(corpus, hash_mode="portable")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    check_native_equals_portable(spark, sf_dir, 3)
 
 
 def test_trigram_broadcast_plan(spark, sf_dir):
-    from xjs.pipeline.lm import lm_score_trigram
+    check_portable_plan_broadcasts(spark, sf_dir, 3)
 
-    plan = (
-        lm_score_trigram(lm_corpus(spark, sf_dir), hash_mode="portable")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # portable reference: both model probes broadcast
-    assert plan.count("BroadcastHashJoin") >= 2
+
+def test_trigram_native_kernel_plan_is_shuffle_free(spark, sf_dir):
+    check_native_plan_is_shuffle_free(spark, sf_dir, 3)
 
 
 # ---------------------------------------------------------------------------

@@ -1,36 +1,24 @@
 """5-gram LM (CCNet's deployed model form): pinned artifact retrain,
 the 4-level recursive stupid-backoff chain hand-checked at every
-level as exact integers, hash-mode equivalence, and the model-agnostic
-bucket hook."""
+level as exact integers, hash-mode equivalence, and the CCNet buckets
+under the 5-gram artifact.  The per-order checks are shared with the
+bigram and trigram tests (tests/lm_checks.py)."""
 
-import pickle
-
+from lm_checks import (
+    check_gate_drops_exactly_the_noise,
+    check_native_equals_portable,
+    check_native_plan_is_shuffle_free,
+    check_portable_plan_broadcasts,
+    check_retrains_byte_identical,
+)
 from pyspark.sql import functions as F
 
-from xjs.pipeline.lm import (
-    DEFAULT_LM5,
-    ccnet_buckets,
-    lm_corpus,
-    lm_filter_5gram,
-    lm_score_5gram,
-)
+from xjs.pipeline.lm import DEFAULT_LM5, ccnet_buckets, lm_corpus, lm_score
 from xjs.pipeline.model_artifact import load
 
 
 def test_5gram_artifact_retrains_byte_identical():
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "train_5gram_lm",
-        Path(__file__).resolve().parent.parent / "scripts"
-        / "train_5gram_lm.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert pickle.dumps(mod.train(), protocol=4) == pickle.dumps(
-        load(DEFAULT_LM5), protocol=4
-    )
+    check_retrains_byte_identical(5)
 
 
 def test_backoff_chain_exact_at_every_level(spark):
@@ -66,7 +54,7 @@ def test_backoff_chain_exact_at_every_level(spark):
         "doc_id long, text string",
     )
     got = {r.doc_id: (r.n_transitions, r.lp_sum)
-           for r in lm_score_5gram(df).collect()}
+           for r in lm_score(df, DEFAULT_LM5).collect()}
     assert got[1] == (1, t5[g5])
     assert got[2] == (1, t4[g4] + b)
     assert got[3] == (1, t3[g3] + 2 * b)
@@ -76,55 +64,26 @@ def test_backoff_chain_exact_at_every_level(spark):
 
 
 def test_native_equals_portable(spark, sf_dir):
-    corpus = lm_corpus(spark, sf_dir)
-    nat = sorted(map(tuple, lm_filter_5gram(corpus,
-                                            hash_mode="native").collect()))
-    por = sorted(map(tuple, lm_filter_5gram(corpus,
-                                            hash_mode="portable").collect()))
-    assert nat == por
+    check_native_equals_portable(spark, sf_dir, 5)
 
 
 def test_gate_drops_exactly_the_noise(spark, sf_dir):
-    """The doubled-token noise docs land on the OOV floor at every
-    transition; the 5-gram gate must reject exactly those (judgeable
-    ones), like the lower-order gates."""
-    out = lm_filter_5gram(lm_corpus(spark, sf_dir)).collect()
-    for r in out:
-        if r.n_transitions == 0:
-            assert r.keep
-        elif r.doc_id % 9 == 0:
-            assert not r.keep, r
-        else:
-            assert r.keep, r
+    check_gate_drops_exactly_the_noise(spark, sf_dir, 5)
 
 
 def test_all_four_tables_broadcast(spark, sf_dir):
-    plan = lm_score_5gram(lm_corpus(spark, sf_dir),
-                          hash_mode="portable")._jdf \
-        .queryExecution().executedPlan().toString()
-    # portable reference: all four model probes broadcast; the corpus
-    # never shuffles on a gram key
-    assert plan.count("BroadcastHashJoin") >= 4
-    for line in plan.splitlines():
-        if "SortMergeJoin" in line:
-            assert "_k" not in line, line
+    check_portable_plan_broadcasts(spark, sf_dir, 5)
 
 
 def test_native_kernel_plan_is_shuffle_free(spark, sf_dir):
-    """hash_mode='native' (r6) is one narrow Arrow kernel."""
-    plan = lm_score_5gram(lm_corpus(spark, sf_dir))._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan
-    for node in ("Exchange", "Join"):
-        assert node not in plan, node
+    check_native_plan_is_shuffle_free(spark, sf_dir, 5)
 
 
 def test_bucket_hook_uses_the_5gram_scorer(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang")
     corpus = lm_corpus(spark, sf_dir).join(d, "doc_id")
-    out = ccnet_buckets(corpus, artifact=DEFAULT_LM5,
-                        scorer=lm_score_5gram)
+    out = ccnet_buckets(corpus, artifact=DEFAULT_LM5)
     buckets = {r.bucket for r in out.collect()}
     assert buckets == {"head", "middle", "tail"}
     # noise docs must not dominate head: their per-transition score is

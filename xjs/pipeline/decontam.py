@@ -40,6 +40,8 @@ def doc_grams(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         from xjs.pipeline.grams import ngram_rows
 
         return ngram_rows(df, [id_col], text_col, n)
+    if builder != "hof":
+        raise ValueError(f"unknown builder {builder!r}")
     return df.select(
         F.col(id_col),
         F.explode(F.array_distinct(token_ngrams(F.col(text_col), n))).alias("gram"),

@@ -67,6 +67,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xjs.pipeline.text import tokens
+
 # ---------------------------------------------------------------------------
 # C4 line-level cleaning
 # ---------------------------------------------------------------------------
@@ -79,7 +81,7 @@ _TERMINAL = (".", "!", "?", '"')
 def _words(l: Column) -> Column:
     """Non-empty whitespace tokens of a (line) column — the Java-\\s /
     RE2-\\s classes agree, the pairing every oracle in the repo uses."""
-    return F.filter(F.split(F.trim(l), r"\s+"), lambda w: w != F.lit(""))
+    return F.filter(tokens(l), lambda w: w != F.lit(""))
 
 
 def _c4_keep_line(min_words: int):

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xjs.pipeline.text import tokens
+
 HREF_RE = r"""(?i)href\s*=\s*["']([^"']*)["']"""
 
 
@@ -384,7 +386,7 @@ def anchor_text_terms(pairs: DataFrame, k: int = 5) -> DataFrame:
     terms = (pairs
              .filter(F.length(F.trim("anchor")) > 0)
              .select(dst.alias("target_domain"),
-                     F.explode(F.split(F.trim("anchor"), r"\s+"))
+                     F.explode(tokens(F.col("anchor")))
                      .alias("term"))
              .groupBy("target_domain", "term")
              .agg(F.count(F.lit(1)).alias("cnt")))

@@ -2,26 +2,29 @@
 quality gate: score each document under a small LM trained on a
 REFERENCE corpus, keep documents whose per-token log-probability
 clears a threshold (equivalently, whose perplexity is low enough).
-CCNet uses a 5-gram KenLM; the committed artifact here is a bigram
-model with add-1 smoothing (scripts/train_bigram_lm.py), which keeps
-the operator end-to-end exact while exercising the identical pipeline
-mechanics: trained artifact → distributed scoring → threshold gate.
+One scorer serves every committed artifact and reads the model order
+and the backoff chain from it: a bigram model with add-1 smoothing
+(scripts/train_bigram_lm.py), a singleton-pruned trigram
+(scripts/train_trigram_lm.py) and a 5-gram — CCNet's deployed model
+form (scripts/train_5gram_lm.py) — the last two with integer stupid
+backoff.  Small models keep the operator end-to-end exact while
+exercising the identical pipeline mechanics: trained artifact →
+distributed scoring → threshold gate.
 
 Exactness design: the artifact stores log-probabilities as INTEGER
 micro-nats (round(ln p × 1e6)), so a document's score is an integer
 SUM — order-independent, bit-identical in Spark, numpy, and DuckDB —
 and the filter compares integers (sum ≥ threshold × n_transitions),
 no floating-point aggregation anywhere.  The DuckDB oracle embeds the
-artifact's bigram table as a VALUES list (the BPE-oracle pattern:
+artifact's order tables as VALUES lists (the BPE-oracle pattern:
 the oracle is built driver-side FROM the same artifact).
 
-Scale shape: transitions are a narrow ``arrays_zip(slice, slice)``
-explode (no window, no per-doc state); the bigram table (model-sized,
-~|V|² rows max) broadcast-joins; per-doc aggregation is ONE groupBy
-on the doc id summing (long, long) — map-side partials absorb the
-explosion, so the shuffle carries two longs per doc per partition.
-At 10^12 docs this is the token-counting shape with a broadcast
-lookup bolted on.
+Scale shape: transitions are a narrow ``arrays_zip(slice, ...)``
+explode (no window, no per-doc state); each order table (model-sized)
+broadcast-joins; per-doc aggregation is ONE groupBy on the doc id
+summing (long, long) — map-side partials absorb the explosion, so the
+shuffle carries two longs per doc per partition.  At 10^12 docs this
+is the token-counting shape with a broadcast lookup bolted on.
 
 The reference engine (/root/reference, a schema validator) has no
 corpus operators; this op belongs to the training-data-pipeline
@@ -30,23 +33,52 @@ mandate.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline.model_artifact import PKG_PREFIX, load
+from xjs.pipeline.text import tokens
 
 DEFAULT_LM = PKG_PREFIX + "bigram_lm.pkl"
 DEFAULT_LM3 = PKG_PREFIX + "trigram_lm.pkl"
+DEFAULT_LM5 = PKG_PREFIX + "fivegram_lm.pkl"
 
 #: default gate: mean transition log-prob ≥ ln(1/MAX_PPL)
 MAX_PPL = 400.0
 
+#: gram column names per order, longest context first
+_GRAM_COLS = {5: ["p4", "p3", "p2", "p1", "tok"],
+              4: ["p3", "p2", "p1", "tok"],
+              3: ["p2", "p1", "tok"],
+              2: ["p1", "tok"]}
 
-def _bigram_df(spark: SparkSession, artifact: str) -> tuple[DataFrame, int]:
+
+def _model(artifact: str) -> tuple[dict, dict, int]:
+    """(tables, penalties, lp_oov) of a committed LM artifact.
+    ``tables`` is {order: [(tok..., lp), ...]}, highest order first;
+    ``penalties`` is {order: (top - order) × backoff}, the integer the
+    stupid-backoff chain adds when a transition falls through to that
+    order.  Reads the three committed layouts: bigram (``bigrams``),
+    trigram (``trigrams``, ``bigrams``, ``backoff``) and 5-gram
+    (``order``, ``tables``, ``backoff``)."""
     model = load(artifact)
-    rows = [(p, w, int(lp)) for p, w, lp in model["bigrams"]]
-    df = spark.createDataFrame(rows, "prev string, tok string, lp long")
-    return df, int(model["lp_oov"])
+    if "tables" in model:
+        raw = model["tables"]
+        if model["order"] != max(raw):
+            raise ValueError(f"{artifact}: order {model['order']} but "
+                             f"tables up to {max(raw)}")
+    else:
+        raw = {2: model["bigrams"]}
+        if "trigrams" in model:
+            raw[3] = model["trigrams"]
+    top = max(raw)
+    backoff = int(model.get("backoff", 0))
+    tables = {n: [(*g[:-1], int(g[-1])) for g in raw[n]]
+              for n in sorted(raw, reverse=True)}
+    penalties = {n: (top - n) * backoff for n in tables}
+    return tables, penalties, int(model["lp_oov"])
 
 
 # --------------------------------------------------------------------------
@@ -188,17 +220,24 @@ def lm_score(
     carry_cols: tuple = (),
 ) -> DataFrame:
     """(id, n_transitions, lp_sum): integer micro-nat log-probability
-    of each document's token-transition sequence under the artifact's
-    bigram model (unseen transitions back off to the model's OOV
-    floor).  Docs with < 2 tokens score (0, 0) — no transitions.
+    of each document's token transitions under the artifact's n-gram
+    model with RECURSIVE stupid backoff over its order tables — for a
+    top order n:
 
-    ``hash_mode='native'`` (default) probes the broadcast model on
-    ``xxhash64(prev, tok)`` longs instead of string pairs — the
-    substring-dedup precedent: a colliding probe mis-scores one
-    transition with probability ~|model|/2^64 per probe, negligible
-    against the model's own smoothing error.  ``'portable'`` joins on
-    the exact strings (the oracle-provable reference; interleaved A/B
-    at 1M docs: 2.6s native vs 6.9s portable, identical output).
+        lp = coalesce(lp_n, lp_(n-1) + B, ..., lp_2 + (n-2)B, lp_oov)
+
+    Each missed order adds the artifact's integer backoff constant B
+    (the multiplier ln(0.4) is an integer ADDITION in micro-nat
+    space), so pruning costs no exactness and the chain stays exact
+    integer arithmetic end to end.  The bigram artifact has no backoff:
+    unseen transitions land on the OOV floor.  Docs with fewer than n
+    tokens score (0, 0) — no transitions.
+
+    ``hash_mode='native'`` (default) runs the zero-shuffle Arrow kernel
+    above.  ``'portable'`` is the oracle-provable reference: one narrow
+    ``arrays_zip`` explode of the top-order windows, one broadcast left
+    join per order table on the exact strings, and one doc-keyed
+    partial-agg sum; the native==portable tests pin the kernel to it.
 
     ``carry_cols`` names extra per-doc columns (functionally dependent
     on the id, e.g. the language) carried through the aggregation so
@@ -208,50 +247,39 @@ def lm_score(
     per such doc) instead of the previous id-only join-back against the
     corpus — that join was two corpus-sized Exchanges per call (r6
     guide §2.4); the null rows are masked out of both aggregates."""
-    spark = df.sparkSession
+    if hash_mode not in ("native", "portable"):
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    tables, penalties, lp_oov = _model(artifact)
     if hash_mode == "native":
-        model = load(artifact)
-        return _score_kernel(
-            df, {2: [(p, w, int(lp)) for p, w, lp in model["bigrams"]]},
-            {2: 0}, int(model["lp_oov"]), text_col, id_col, carry_cols)
-    bigrams, lp_oov = _bigram_df(spark, artifact)
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(toks)
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))).alias("prev"),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("tok"),
-    )
+        return _score_kernel(df, tables, penalties, lp_oov, text_col,
+                             id_col, carry_cols)
+    spark = df.sparkSession
+    cols = _GRAM_COLS[max(tables)]
+    toks = tokens(F.col(text_col))
+    m = F.greatest(F.size(toks) - (len(cols) - 1), F.lit(0))
+    windows = F.arrays_zip(
+        *[F.slice(toks, i + 1, m).alias(c) for i, c in enumerate(cols)])
     carry = list(carry_cols)
-    trans = df.select(
-        id_col, *carry, F.explode_outer(pairs).alias("_t")
+    scored = df.select(
+        id_col, *carry, F.explode_outer(windows).alias("_t")
     ).select(
         id_col, *carry,
         F.col("_t").isNotNull().alias("_has"),
-        F.col("_t.prev").alias("prev"), F.col("_t.tok").alias("tok"),
-    )
-    if hash_mode == "native":
-        trans = trans.select(
-            id_col, *carry, "_has",
-            F.when(F.col("_has"), F.xxhash64("prev", "tok")).alias("_bk"),
-        )
-        model = bigrams.select(F.xxhash64("prev", "tok").alias("_bk"), "lp")
-        join_keys = ["_bk"]
-    else:
-        model = bigrams
-        join_keys = ["prev", "tok"]
-    return (
-        trans.join(F.broadcast(model), join_keys, "left")
-        .groupBy(id_col, *carry)
-        .agg(
-            F.count(F.when(F.col("_has"), F.lit(1))).alias("n_transitions"),
-            F.coalesce(
-                F.sum(F.when(F.col("_has"),
-                             F.coalesce("lp", F.lit(lp_oov)))),
-                F.lit(0).cast("long"),
-            ).alias("lp_sum"),
-        )
-        .select(id_col, *carry, "n_transitions", "lp_sum")
-    )
+        *[F.col(f"_t.{c}").alias(c) for c in cols])
+    for n, rows in tables.items():
+        schema = ", ".join(f"{c} string" for c in _GRAM_COLS[n]) + f", lp{n} long"
+        scored = scored.join(
+            F.broadcast(spark.createDataFrame(rows, schema)),
+            _GRAM_COLS[n], "left")
+    lp = F.coalesce(
+        *[F.col(f"lp{n}") + F.lit(penalties[n]) if penalties[n]
+          else F.col(f"lp{n}") for n in tables],
+        F.lit(lp_oov))
+    return scored.groupBy(id_col, *carry).agg(
+        F.count(F.when(F.col("_has"), F.lit(1))).alias("n_transitions"),
+        F.coalesce(F.sum(F.when(F.col("_has"), lp)),
+                   F.lit(0).cast("long")).alias("lp_sum"),
+    ).select(id_col, *carry, "n_transitions", "lp_sum")
 
 
 def lm_filter(
@@ -266,8 +294,6 @@ def lm_filter(
     iff mean transition log-prob ≥ ln(1/max_ppl) — compared in integer
     arithmetic (lp_sum ≥ threshold × n_transitions), so the verdict is
     exact.  Zero-transition docs are kept (nothing to judge)."""
-    import math
-
     thr = round(-math.log(max_ppl) * 1_000_000)
     s = lm_score(df, artifact, text_col, id_col, hash_mode)
     return s.select(
@@ -281,245 +307,16 @@ def lm_filter(
     )
 
 
-def lm_score_trigram(
-    df: DataFrame,
-    artifact: str = DEFAULT_LM3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "native",
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """(id, n_transitions, lp_sum): integer micro-nat score under the
-    singleton-pruned trigram artifact with STUPID BACKOFF — a
-    transition (p2, p1, w) scores the trigram lp if the pruned table
-    holds it, else the bigram lp + the artifact's integer backoff
-    constant, else the OOV floor.  The backoff multiplier ln(0.4) is an
-    integer ADDITION in micro-nat space, so pruning costs no exactness
-    (scripts/train_trigram_lm.py).  Docs with < 3 tokens score (0, 0).
-
-    Scale shape: one narrow triple explode, then TWO broadcast left
-    joins (trigram probe, bigram backoff probe — both model-sized) and
-    the same single doc-keyed partial-agg sum as the bigram scorer.
-    ``hash_mode='native'`` runs the zero-shuffle Arrow kernel (the
-    lm_score precedent); 'portable' joins exact strings for the
-    oracle."""
-    spark = df.sparkSession
-    model = load(artifact)
-    if hash_mode == "native":
-        return _score_kernel(
-            df,
-            {3: [(a, b, c, int(lp)) for a, b, c, lp in model["trigrams"]],
-             2: [(p, w, int(lp)) for p, w, lp in model["bigrams"]]},
-            {3: 0, 2: int(model["backoff"])},
-            int(model["lp_oov"]), text_col, id_col, carry_cols)
-    tri = spark.createDataFrame(
-        [(a, b, c, int(lp)) for a, b, c, lp in model["trigrams"]],
-        "p2 string, p1 string, tok string, lp3 long",
-    )
-    bi = spark.createDataFrame(
-        [(p, w, int(lp)) for p, w, lp in model["bigrams"]],
-        "p1 string, tok string, lp2 long",
-    )
-    lp_oov = int(model["lp_oov"])
-    backoff = int(model["backoff"])
-
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(toks)
-    m = F.greatest(n - 2, F.lit(0))
-    triples = F.arrays_zip(
-        F.slice(toks, 1, m).alias("p2"),
-        F.slice(toks, 2, m).alias("p1"),
-        F.slice(toks, 3, m).alias("tok"),
-    )
-    carry = list(carry_cols)
-    # explode_outer keeps zero-transition docs as one masked null row —
-    # no corpus-sized join-back (see lm_score)
-    trans = df.select(
-        id_col, *carry, F.explode_outer(triples).alias("_t")
-    ).select(
-        id_col, *carry,
-        F.col("_t").isNotNull().alias("_has"),
-        F.col("_t.p2").alias("p2"),
-        F.col("_t.p1").alias("p1"),
-        F.col("_t.tok").alias("tok"),
-    )
-    if hash_mode == "native":
-        trans = trans.select(
-            id_col, *carry, "_has",
-            F.when(F.col("_has"), F.xxhash64("p2", "p1", "tok")).alias("_k3"),
-            F.when(F.col("_has"), F.xxhash64("p1", "tok")).alias("_k2"),
-        )
-        tri = tri.select(F.xxhash64("p2", "p1", "tok").alias("_k3"), "lp3")
-        bi = bi.select(F.xxhash64("p1", "tok").alias("_k2"), "lp2")
-        k3, k2 = ["_k3"], ["_k2"]
-    else:
-        k3, k2 = ["p2", "p1", "tok"], ["p1", "tok"]
-    lp = F.coalesce(
-        F.col("lp3"), F.col("lp2") + F.lit(backoff), F.lit(lp_oov)
-    )
-    return (
-        trans.join(F.broadcast(tri), k3, "left")
-        .join(F.broadcast(bi), k2, "left")
-        .groupBy(id_col, *carry)
-        .agg(
-            F.count(F.when(F.col("_has"), F.lit(1))).alias("n_transitions"),
-            F.coalesce(F.sum(F.when(F.col("_has"), lp)),
-                       F.lit(0).cast("long")).alias("lp_sum"),
-        )
-        .select(id_col, *carry, "n_transitions", "lp_sum")
-    )
-
-
-def lm_filter_trigram(
-    df: DataFrame,
-    max_ppl: float = MAX_PPL,
-    artifact: str = DEFAULT_LM3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "native",
-) -> DataFrame:
-    """lm_filter under the trigram+backoff scorer — same integer gate."""
-    import math
-
-    thr = round(-math.log(max_ppl) * 1_000_000)
-    s = lm_score_trigram(df, artifact, text_col, id_col, hash_mode)
-    return s.select(
-        id_col,
-        "n_transitions",
-        "lp_sum",
-        (
-            (F.col("n_transitions") == 0)
-            | (F.col("lp_sum") >= F.lit(thr) * F.col("n_transitions"))
-        ).alias("keep"),
-    )
+def lm_filter_5gram(df: DataFrame, **kw) -> DataFrame:
+    """lm_filter under the committed 5-gram artifact."""
+    return lm_filter(df, artifact=DEFAULT_LM5, **kw)
 
 
 # --------------------------------------------------------------------------
 # query + oracle: the corpus mixes in-distribution docs with injected
-# shuffled-vocab noise (OOV-free but transition-breaking), so the gate
-# has real work; the oracle embeds the artifact's table as VALUES.
+# doubled-token noise (out of vocabulary), so the gate has real work;
+# the oracle embeds the artifact's tables as VALUES.
 # --------------------------------------------------------------------------
-
-DEFAULT_LM5 = PKG_PREFIX + "fivegram_lm.pkl"
-
-#: gram column names per order, longest context first
-_GRAM_COLS = {5: ["p4", "p3", "p2", "p1", "tok"],
-              4: ["p3", "p2", "p1", "tok"],
-              3: ["p2", "p1", "tok"],
-              2: ["p1", "tok"]}
-
-
-def lm_score_5gram(
-    df: DataFrame,
-    artifact: str = DEFAULT_LM5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "native",
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """(id, n_transitions, lp_sum): integer micro-nat score under the
-    committed 5-gram artifact — CCNet's deployed model form — with
-    RECURSIVE stupid backoff over the pruned order tables:
-
-        lp = coalesce(lp5, lp4 + B, lp3 + 2B, lp2 + 3B, lp_oov)
-
-    Each missed order adds the integer backoff constant, so the
-    4-level chain stays exact integer arithmetic end to end
-    (scripts/train_5gram_lm.py).  Docs with < 5 tokens score (0, 0).
-
-    Scale shape: one narrow 5-tuple explode, then FOUR broadcast left
-    joins (all model-sized), and the same single doc-keyed partial-agg
-    sum as the lower-order scorers — at 10^12 docs the shuffle still
-    carries two longs per doc per partition.  'native' runs the
-    zero-shuffle Arrow kernel; 'portable' joins exact strings for the
-    oracle."""
-    spark = df.sparkSession
-    model = load(artifact)
-    assert model.get("order") == 5, artifact
-    backoff = int(model["backoff"])
-    lp_oov = int(model["lp_oov"])
-    if hash_mode == "native":
-        return _score_kernel(
-            df,
-            {n: [(*g[:-1], int(g[-1])) for g in model["tables"][n]]
-             for n in (5, 4, 3, 2)},
-            {5: 0, 4: backoff, 3: 2 * backoff, 2: 3 * backoff},
-            lp_oov, text_col, id_col, carry_cols)
-
-    tabs = {}
-    for n, cols in _GRAM_COLS.items():
-        schema = ", ".join(f"{c} string" for c in cols) + f", lp{n} long"
-        tabs[n] = spark.createDataFrame(
-            [(*g[:-1], int(g[-1])) for g in model["tables"][n]], schema)
-
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_tok = F.size(toks)
-    m = F.greatest(n_tok - 4, F.lit(0))
-    tuples = F.arrays_zip(
-        *[F.slice(toks, i + 1, m).alias(c)
-          for i, c in enumerate(_GRAM_COLS[5])])
-    carry = list(carry_cols)
-    # explode_outer keeps zero-transition docs as one masked null row —
-    # no corpus-sized join-back (see lm_score)
-    trans = df.select(
-        id_col, *carry, F.explode_outer(tuples).alias("_t")
-    ).select(
-        id_col, *carry,
-        F.col("_t").isNotNull().alias("_has"),
-        *[F.col(f"_t.{c}").alias(c) for c in _GRAM_COLS[5]])
-
-    if hash_mode == "native":
-        trans = trans.select(
-            id_col, *carry, "_has",
-            *[F.when(F.col("_has"), F.xxhash64(*_GRAM_COLS[n]))
-              .alias(f"_k{n}") for n in _GRAM_COLS])
-        keys = {}
-        for n, cols in _GRAM_COLS.items():
-            tabs[n] = tabs[n].select(
-                F.xxhash64(*cols).alias(f"_k{n}"), f"lp{n}")
-            keys[n] = [f"_k{n}"]
-    else:
-        keys = dict(_GRAM_COLS)
-
-    lp = F.coalesce(
-        F.col("lp5"),
-        F.col("lp4") + F.lit(backoff),
-        F.col("lp3") + F.lit(2 * backoff),
-        F.col("lp2") + F.lit(3 * backoff),
-        F.lit(lp_oov),
-    )
-    scored = trans
-    for n in (5, 4, 3, 2):
-        scored = scored.join(F.broadcast(tabs[n]), keys[n], "left")
-    return scored.groupBy(id_col, *carry).agg(
-        F.count(F.when(F.col("_has"), F.lit(1))).alias("n_transitions"),
-        F.coalesce(F.sum(F.when(F.col("_has"), lp)),
-                   F.lit(0).cast("long")).alias("lp_sum"),
-    ).select(id_col, *carry, "n_transitions", "lp_sum")
-
-
-def lm_filter_5gram(
-    df: DataFrame,
-    max_ppl: float = MAX_PPL,
-    artifact: str = DEFAULT_LM5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "native",
-) -> DataFrame:
-    """lm_filter under the 5-gram backoff scorer — same integer gate."""
-    import math
-
-    thr = round(-math.log(max_ppl) * 1_000_000)
-    s = lm_score_5gram(df, artifact, text_col, id_col, hash_mode)
-    return s.select(
-        id_col,
-        "n_transitions",
-        "lp_sum",
-        (
-            (F.col("n_transitions") == 0)
-            | (F.col("lp_sum") >= F.lit(thr) * F.col("n_transitions"))
-        ).alias("keep"),
-    )
 
 
 def lm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,10 +330,7 @@ def lm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigrams are in-model — so the noise must leave the vocabulary)
     noisy = F.concat_ws(
         " ",
-        F.transform(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.concat(t, t),
-        ),
+        F.transform(tokens(F.col("text")), lambda t: F.concat(t, t)),
     )
     return d.select(
         "doc_id",
@@ -544,98 +338,64 @@ def lm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lang_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang")
+    return lm_corpus(spark, sf_dir).join(d, "doc_id")
+
+
+# the declared queries run the provable string joins (the substring
+# hash_mode precedent); bench/production run 'native'
+
+
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # oracle row runs the provable string-pair join (the substring
-    # hash_mode precedent); bench/production run 'native'
     return lm_filter(lm_corpus(spark, sf_dir), hash_mode="portable")
 
 
 def q_lm_perplexity_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lm_filter_trigram(lm_corpus(spark, sf_dir), hash_mode="portable")
-
-
-def oracle_lm_perplexity_trigram_sql(artifact: str = DEFAULT_LM3) -> str:
-    import math
-
-    model = load(artifact)
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    tri_vals = ", ".join(
-        f"('{esc(a)}', '{esc(b)}', '{esc(c)}', {lp})"
-        for a, b, c, lp in model["trigrams"]
-    )
-    bi_vals = ", ".join(
-        f"('{esc(p)}', '{esc(w)}', {lp})" for p, w, lp in model["bigrams"]
-    )
-    lp_oov = int(model["lp_oov"])
-    backoff = int(model["backoff"])
-    thr = round(-math.log(MAX_PPL) * 1_000_000)
-    return f"""
-WITH corpus AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 9 = 0
-                THEN array_to_string(list_transform(
-                         regexp_split_to_array(trim(text), '\\s+'),
-                         t -> t || t), ' ')
-                ELSE text END AS text
-    FROM documents
-),
-lm3(p2, p1, tok, lp3) AS (VALUES {tri_vals}),
-lm2(p1, tok, lp2) AS (VALUES {bi_vals}),
-toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
-),
-trans AS (
-    SELECT doc_id, t[i - 2] AS p2, t[i - 1] AS p1, t[i] AS tok
-    FROM toks, unnest(range(3, len(t) + 1)) AS r(i)
-),
-scored AS (
-    SELECT tr.doc_id, COUNT(*) AS n_transitions,
-           SUM(COALESCE(lm3.lp3, lm2.lp2 + {backoff}, {lp_oov})) AS lp_sum
-    FROM trans tr
-    LEFT JOIN lm3 ON lm3.p2 = tr.p2 AND lm3.p1 = tr.p1 AND lm3.tok = tr.tok
-    LEFT JOIN lm2 ON lm2.p1 = tr.p1 AND lm2.tok = tr.tok
-    GROUP BY tr.doc_id
-)
-SELECT c.doc_id,
-       COALESCE(s.n_transitions, 0) AS n_transitions,
-       COALESCE(s.lp_sum, 0)::BIGINT AS lp_sum,
-       (COALESCE(s.n_transitions, 0) = 0
-        OR COALESCE(s.lp_sum, 0) >= {thr}::BIGINT * s.n_transitions) AS keep
-FROM corpus c LEFT JOIN scored s USING (doc_id)
-"""
+    return lm_filter(lm_corpus(spark, sf_dir), artifact=DEFAULT_LM3,
+                     hash_mode="portable")
 
 
 def q_lm_perplexity_5gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lm_filter_5gram(lm_corpus(spark, sf_dir), hash_mode="portable")
+    return lm_filter(lm_corpus(spark, sf_dir), artifact=DEFAULT_LM5,
+                     hash_mode="portable")
 
 
-def oracle_lm_perplexity_5gram_sql(artifact: str = DEFAULT_LM5) -> str:
-    """The 4-level backoff chain restated in SQL with the artifact's
-    tables embedded as VALUES — built driver-side FROM the same
-    artifact, so the comparison pins the whole scorer bit-exactly."""
-    import math
-
-    model = load(artifact)
+def _oracle_scored_sql(artifact: str, corpus_cols: str) -> str:
+    """The CTE chain every LM oracle shares: the noisy ``corpus``
+    (``corpus_cols`` + text), one VALUES table per model order built
+    driver-side FROM the artifact, the top-order windows ``trans`` and
+    ``scored`` (doc_id, n, lp_sum) with the backoff chain restated as
+    one COALESCE — so the comparison pins the whole scorer
+    bit-exactly.  Docs without transitions have no ``scored`` row."""
+    tables, penalties, lp_oov = _model(artifact)
+    top = max(tables)
 
     def esc(s: str) -> str:
         return s.replace("'", "''")
 
-    def vals(n: int) -> str:
+    def values(n: int) -> str:
         return ", ".join(
             "(" + ", ".join([f"'{esc(x)}'" for x in g[:-1]]
-                            + [str(int(g[-1]))]) + ")"
-            for g in model["tables"][n]
+                            + [str(g[-1])]) + ")"
+            for g in tables[n]
         )
 
-    lp_oov = int(model["lp_oov"])
-    b = int(model["backoff"])
-    thr = round(-math.log(MAX_PPL) * 1_000_000)
+    lms = ",\n".join(
+        f"lm{n}({', '.join(_GRAM_COLS[n])}, lp{n}) AS (VALUES {values(n)})"
+        for n in tables)
+    windows = ", ".join(f"t[i - {top - 1 - k}] AS {c}"
+                        for k, c in enumerate(_GRAM_COLS[top]))
+    chain = ", ".join([f"lm{n}.lp{n} + {penalties[n]}" for n in tables]
+                      + [str(lp_oov)])
+    joins = "\n    ".join(
+        f"LEFT JOIN lm{n} ON "
+        + " AND ".join(f"lm{n}.{c} = tr.{c}" for c in _GRAM_COLS[n])
+        for n in tables)
     return f"""
 WITH corpus AS (
-    SELECT doc_id,
+    SELECT {corpus_cols},
            CASE WHEN doc_id % 9 = 0
                 THEN array_to_string(list_transform(
                          regexp_split_to_array(trim(text), '\\s+'),
@@ -643,82 +403,41 @@ WITH corpus AS (
                 ELSE text END AS text
     FROM documents
 ),
-lm5(p4, p3, p2, p1, tok, lp5) AS (VALUES {vals(5)}),
-lm4(p3, p2, p1, tok, lp4) AS (VALUES {vals(4)}),
-lm3(p2, p1, tok, lp3) AS (VALUES {vals(3)}),
-lm2(p1, tok, lp2) AS (VALUES {vals(2)}),
+{lms},
 toks AS (
     SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
 ),
 trans AS (
-    SELECT doc_id, t[i - 4] AS p4, t[i - 3] AS p3, t[i - 2] AS p2,
-           t[i - 1] AS p1, t[i] AS tok
-    FROM toks, unnest(range(5, len(t) + 1)) AS r(i)
+    SELECT doc_id, {windows}
+    FROM toks, unnest(range({top}, len(t) + 1)) AS r(i)
 ),
 scored AS (
-    SELECT tr.doc_id, COUNT(*) AS n_transitions,
-           SUM(COALESCE(lm5.lp5, lm4.lp4 + {b}, lm3.lp3 + {2 * b},
-                        lm2.lp2 + {3 * b}, {lp_oov})) AS lp_sum
+    SELECT tr.doc_id, COUNT(*) AS n,
+           SUM(COALESCE({chain}))::BIGINT AS lp_sum
     FROM trans tr
-    LEFT JOIN lm5 ON lm5.p4 = tr.p4 AND lm5.p3 = tr.p3
-        AND lm5.p2 = tr.p2 AND lm5.p1 = tr.p1 AND lm5.tok = tr.tok
-    LEFT JOIN lm4 ON lm4.p3 = tr.p3 AND lm4.p2 = tr.p2
-        AND lm4.p1 = tr.p1 AND lm4.tok = tr.tok
-    LEFT JOIN lm3 ON lm3.p2 = tr.p2 AND lm3.p1 = tr.p1
-        AND lm3.tok = tr.tok
-    LEFT JOIN lm2 ON lm2.p1 = tr.p1 AND lm2.tok = tr.tok
+    {joins}
     GROUP BY tr.doc_id
-)
-SELECT c.doc_id,
-       COALESCE(s.n_transitions, 0) AS n_transitions,
-       COALESCE(s.lp_sum, 0)::BIGINT AS lp_sum,
-       (COALESCE(s.n_transitions, 0) = 0
-        OR COALESCE(s.lp_sum, 0) >= {thr}::BIGINT * s.n_transitions) AS keep
-FROM corpus c LEFT JOIN scored s USING (doc_id)
-"""
+)"""
 
 
 def oracle_lm_perplexity_sql(artifact: str = DEFAULT_LM) -> str:
-    import math
-
-    model = load(artifact)
-    vals = ", ".join(
-        "('{}', '{}', {})".format(p.replace("'", "''"), w.replace("'", "''"), lp)
-        for p, w, lp in model["bigrams"]
-    )
-    lp_oov = int(model["lp_oov"])
     thr = round(-math.log(MAX_PPL) * 1_000_000)
-    return f"""
-WITH corpus AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 9 = 0
-                THEN array_to_string(list_transform(
-                         regexp_split_to_array(trim(text), '\\s+'),
-                         t -> t || t), ' ')
-                ELSE text END AS text
-    FROM documents
-),
-lm(prev, tok, lp) AS (VALUES {vals}),
-toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
-),
-trans AS (
-    SELECT doc_id, t[i - 1] AS prev, t[i] AS tok
-    FROM toks, unnest(range(2, len(t) + 1)) AS r(i)
-),
-scored AS (
-    SELECT tr.doc_id, COUNT(*) AS n_transitions,
-           SUM(COALESCE(lm.lp, {lp_oov})) AS lp_sum
-    FROM trans tr LEFT JOIN lm ON lm.prev = tr.prev AND lm.tok = tr.tok
-    GROUP BY tr.doc_id
-)
+    return _oracle_scored_sql(artifact, "doc_id") + f"""
 SELECT c.doc_id,
-       COALESCE(s.n_transitions, 0) AS n_transitions,
-       COALESCE(s.lp_sum, 0)::BIGINT AS lp_sum,
-       (COALESCE(s.n_transitions, 0) = 0
-        OR COALESCE(s.lp_sum, 0) >= {thr}::BIGINT * s.n_transitions) AS keep
+       COALESCE(s.n, 0) AS n_transitions,
+       COALESCE(s.lp_sum, 0) AS lp_sum,
+       (COALESCE(s.n, 0) = 0
+        OR COALESCE(s.lp_sum, 0) >= {thr}::BIGINT * s.n) AS keep
 FROM corpus c LEFT JOIN scored s USING (doc_id)
 """
+
+
+def oracle_lm_perplexity_trigram_sql() -> str:
+    return oracle_lm_perplexity_sql(DEFAULT_LM3)
+
+
+def oracle_lm_perplexity_5gram_sql() -> str:
+    return oracle_lm_perplexity_sql(DEFAULT_LM5)
 
 
 # ---------------------------------------------------------------------------
@@ -765,16 +484,14 @@ def ccnet_buckets(
     lang_col: str = "lang",
     sample_mod: int = SAMPLE_MOD,
     hash_mode: str = "native",
-    scorer=None,
 ) -> DataFrame:
     """(id, lang, score_key, bucket): CCNet's head/middle/tail split —
     per-language perplexity terciles, better (higher mean log-prob)
     documents land in 'head'.
 
-    ``scorer`` swaps the LM (default ``lm_score``; pass
-    ``lm_score_5gram`` with the 5-gram artifact for CCNet's deployed
-    model form) — the bucket machinery is model-agnostic over any
-    (id, n_transitions, lp_sum) integer scorer.
+    ``artifact`` selects the LM (pass ``DEFAULT_LM5`` for CCNet's
+    deployed 5-gram form) — the bucket machinery only reads the
+    scorer's integer (id, n_transitions, lp_sum).
 
     All-integer arithmetic end to end: score_key = floor(lp_sum /
     n_transitions) in micro-nats per transition (total order with the
@@ -792,21 +509,14 @@ def ccnet_buckets(
     concentrate on one task.  Zero-transition docs are unjudgeable
     and keep bucket 'head' (the permissive default), as do languages
     absent from the sample."""
-    score_fn = scorer or lm_score
 
     def keyed(d: DataFrame) -> DataFrame:
         # score_key NULL for zero-transition (unjudgeable) docs.  The
-        # language column is CARRIED through the scorer's aggregation
-        # when the scorer supports it (all in-module scorers do) — the
-        # previous id-keyed join-back was a corpus-sized shuffle join
-        # paid twice per call (sample + main pass); custom scorers
-        # without carry_cols keep the join fallback.
-        try:
-            s = score_fn(d, artifact, text_col, id_col, hash_mode,
-                         carry_cols=(lang_col,))
-        except TypeError:
-            s = score_fn(d, artifact, text_col, id_col, hash_mode)
-            s = d.select(id_col, lang_col).join(s, id_col)
+        # language column is CARRIED through the scorer's aggregation —
+        # the previous id-keyed join-back was a corpus-sized shuffle
+        # join paid twice per call (sample + main pass).
+        s = lm_score(d, artifact, text_col, id_col, hash_mode,
+                     carry_cols=(lang_col,))
         return s.select(
             id_col, lang_col,
             F.when(
@@ -851,139 +561,18 @@ def ccnet_buckets(
 
 
 def q_lm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang")
-    corpus = lm_corpus(spark, sf_dir).join(d, "doc_id")
-    return ccnet_buckets(corpus, hash_mode="portable")
+    return ccnet_buckets(_lang_corpus(spark, sf_dir), hash_mode="portable")
 
 
 def q_lm_ccnet_buckets_5gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang")
-    corpus = lm_corpus(spark, sf_dir).join(d, "doc_id")
-    return ccnet_buckets(corpus, artifact=DEFAULT_LM5,
-                         hash_mode="portable", scorer=lm_score_5gram)
-
-
-def oracle_lm_ccnet_buckets_5gram_sql(artifact: str = DEFAULT_LM5) -> str:
-    """The ccnet-bucket oracle with the 5-gram backoff scorer's
-    tables/chain swapped into the scored CTE — same integer tercile
-    arithmetic downstream."""
-    model = load(artifact)
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    def vals(n: int) -> str:
-        return ", ".join(
-            "(" + ", ".join([f"'{esc(x)}'" for x in g[:-1]]
-                            + [str(int(g[-1]))]) + ")"
-            for g in model["tables"][n]
-        )
-
-    lp_oov = int(model["lp_oov"])
-    b = int(model["backoff"])
-    return f"""
-WITH corpus AS (
-    SELECT doc_id, lang,
-           CASE WHEN doc_id % 9 = 0
-                THEN array_to_string(list_transform(
-                         regexp_split_to_array(trim(text), '\\s+'),
-                         t -> t || t), ' ')
-                ELSE text END AS text
-    FROM documents
-),
-lm5(p4, p3, p2, p1, tok, lp5) AS (VALUES {vals(5)}),
-lm4(p3, p2, p1, tok, lp4) AS (VALUES {vals(4)}),
-lm3(p2, p1, tok, lp3) AS (VALUES {vals(3)}),
-lm2(p1, tok, lp2) AS (VALUES {vals(2)}),
-toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
-),
-trans AS (
-    SELECT doc_id, t[i - 4] AS p4, t[i - 3] AS p3, t[i - 2] AS p2,
-           t[i - 1] AS p1, t[i] AS tok
-    FROM toks, unnest(range(5, len(t) + 1)) AS r(i)
-),
-scored AS (
-    SELECT tr.doc_id, COUNT(*) AS n,
-           SUM(COALESCE(lm5.lp5, lm4.lp4 + {b}, lm3.lp3 + {2 * b},
-                        lm2.lp2 + {3 * b}, {lp_oov}))::BIGINT AS lp_sum
-    FROM trans tr
-    LEFT JOIN lm5 ON lm5.p4 = tr.p4 AND lm5.p3 = tr.p3
-        AND lm5.p2 = tr.p2 AND lm5.p1 = tr.p1 AND lm5.tok = tr.tok
-    LEFT JOIN lm4 ON lm4.p3 = tr.p3 AND lm4.p2 = tr.p2
-        AND lm4.p1 = tr.p1 AND lm4.tok = tr.tok
-    LEFT JOIN lm3 ON lm3.p2 = tr.p2 AND lm3.p1 = tr.p1
-        AND lm3.tok = tr.tok
-    LEFT JOIN lm2 ON lm2.p1 = tr.p1 AND lm2.tok = tr.tok
-    GROUP BY tr.doc_id
-),
-judged AS (
-    SELECT c.doc_id, c.lang,
-           ((lp_sum - ((lp_sum % n) + n) % n) / n)::BIGINT AS score_key
-    FROM corpus c JOIN scored s USING (doc_id)
-),
-ranked AS (
-    SELECT lang, score_key,
-           ROW_NUMBER() OVER (PARTITION BY lang
-                              ORDER BY score_key DESC, doc_id ASC) AS rn,
-           COUNT(*) OVER (PARTITION BY lang) AS m
-    FROM judged
-    WHERE {_sample_mask_sql("doc_id", SAMPLE_MOD)}
-),
-thresholds AS (
-    SELECT lang,
-           MAX(CASE WHEN rn = ((m + 2) - ((m + 2) % 3)) / 3
-                    THEN score_key END) AS t1,
-           MAX(CASE WHEN rn = ((2 * m + 2) - ((2 * m + 2) % 3)) / 3
-                    THEN score_key END) AS t2
-    FROM ranked GROUP BY lang
-)
-SELECT j.doc_id, j.lang, j.score_key,
-       CASE WHEN t.t1 IS NULL THEN 'head'
-            WHEN j.score_key >= t.t1 THEN 'head'
-            WHEN j.score_key >= t.t2 THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM judged j LEFT JOIN thresholds t USING (lang)
-UNION ALL
-SELECT c.doc_id, c.lang, NULL::BIGINT AS score_key, 'head' AS bucket
-FROM corpus c LEFT JOIN scored s USING (doc_id)
-WHERE s.doc_id IS NULL
-"""
+    return ccnet_buckets(_lang_corpus(spark, sf_dir), artifact=DEFAULT_LM5,
+                         hash_mode="portable")
 
 
 def oracle_lm_ccnet_buckets_sql(artifact: str = DEFAULT_LM) -> str:
-    model = load(artifact)
-    vals = ", ".join(
-        "('{}', '{}', {})".format(p.replace("'", "''"), w.replace("'", "''"), lp)
-        for p, w, lp in model["bigrams"]
-    )
-    lp_oov = int(model["lp_oov"])
-    return f"""
-WITH corpus AS (
-    SELECT doc_id, lang,
-           CASE WHEN doc_id % 9 = 0
-                THEN array_to_string(list_transform(
-                         regexp_split_to_array(trim(text), '\\s+'),
-                         t -> t || t), ' ')
-                ELSE text END AS text
-    FROM documents
-),
-lm(prev, tok, lp) AS (VALUES {vals}),
-toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
-),
-trans AS (
-    SELECT doc_id, t[i - 1] AS prev, t[i] AS tok
-    FROM toks, unnest(range(2, len(t) + 1)) AS r(i)
-),
-scored AS (
-    SELECT tr.doc_id, COUNT(*) AS n,
-           SUM(COALESCE(lm.lp, {lp_oov}))::BIGINT AS lp_sum
-    FROM trans tr LEFT JOIN lm ON lm.prev = tr.prev AND lm.tok = tr.tok
-    GROUP BY tr.doc_id
-),
+    """The scored CTE chain of the artifact's model, then the same
+    integer tercile arithmetic as ccnet_buckets."""
+    return _oracle_scored_sql(artifact, "doc_id, lang") + f""",
 judged AS (
     SELECT c.doc_id, c.lang,
            ((lp_sum - ((lp_sum % n) + n) % n) / n)::BIGINT AS score_key
@@ -1016,3 +605,7 @@ SELECT c.doc_id, c.lang, NULL::BIGINT AS score_key, 'head' AS bucket
 FROM corpus c LEFT JOIN scored s USING (doc_id)
 WHERE s.doc_id IS NULL
 """
+
+
+def oracle_lm_ccnet_buckets_5gram_sql() -> str:
+    return oracle_lm_ccnet_buckets_sql(DEFAULT_LM5)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from xjs.pipeline.text import token_count
+from xjs.pipeline.text import token_count, tokens
 
 BUDGET = 256  # tokens per training bin (tiny for the word-salad corpus)
 
@@ -211,7 +211,7 @@ def chunk_documents(
     the quality signals.  The per-chunk ``slice``/``array_join`` HOF
     cost is output-proportional (every chunk's text must be
     materialized anyway), unlike the per-token folds r2/r4 replaced."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     base = df.select(F.col(id_col), toks.alias("_toks"), F.size(toks).alias("_n"))
     # chunk starts: 0, stride, 2*stride, ... < n (always >= one chunk)
     starts = F.sequence(

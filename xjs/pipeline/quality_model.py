@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline.model_artifact import PKG_PREFIX, load
+from xjs.pipeline.text import tokens
 
 DEFAULT_QC = PKG_PREFIX + "quality_lr.pkl"
 
@@ -103,6 +104,8 @@ def classifier_scores(
     kernel is test-pinned against."""
     if impl == "arrow":
         return _classifier_scores_arrow(df, artifact, text_col, id_col)
+    if impl != "catalyst":
+        raise ValueError(f"unknown impl {impl!r}")
     spark = df.sparkSession
     weights, b_micro, n_buckets = _weights_df(spark, artifact)
     base = df.filter(F.col(text_col).isNotNull()) \
@@ -116,7 +119,7 @@ def classifier_scores(
     toks = base.select(
         "doc_id",
         F.explode_outer(
-            F.when(F.length(F.trim("_t")) > 0, F.split(F.trim("_t"), r"\s+"))
+            F.when(F.length(F.trim("_t")) > 0, tokens(F.col("_t")))
         ).alias("_tok"))
     return (toks
             .select("doc_id", bucket_col(F.col("_tok"), n_buckets)
@@ -224,7 +227,7 @@ def qc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
     corrupted = F.array_join(
-        F.transform(F.split(F.trim("text"), r"\s+"),
+        F.transform(tokens(F.col("text")),
                     lambda t: F.concat(F.lit("zz"), t)),
         " ")
     return d.select(

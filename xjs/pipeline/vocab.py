@@ -38,16 +38,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from xjs.pipeline.text import tokens
+
 PPM = 1_000_000
 DEFAULT_V = 1000
 DEFAULT_K = 5
 
 
 def _token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, token): whitespace tokens, same split contract as
-    text.tokens (trim then split on \\s+); null/blank docs yield no
-    rows."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    """(doc_id, token): whitespace tokens (text.tokens: trim then
+    split on \\s+); null/blank docs yield no rows."""
+    toks = tokens(F.col(text_col))
     return (df
             .filter(F.col(text_col).isNotNull()
                     & (F.length(F.trim(F.col(text_col))) > 0))
@@ -122,6 +123,8 @@ def word_frequencies(df: DataFrame, text_col: str = "text",
     rewrite ships (measured: that pair shuffle dominated the row at 1M
     docs).  'catalyst' is the zero-Python reference the kernel is
     test-pinned against."""
+    if impl not in ("arrow", "catalyst"):
+        raise ValueError(f"unknown impl {impl!r}")
     if impl == "catalyst":
         return (_token_rows(df, text_col, id_col)
                 .groupBy("token")
@@ -138,7 +141,7 @@ def corpus_token_total(df: DataFrame, text_col: str = "text") -> DataFrame:
     aggregate over per-doc token counts — same number as
     sum(freqs.cnt) but without branching the exploded-token DAG a
     second time (the freqs derivation is a shuffle; this is a scan)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     n = F.when(F.col(text_col).isNull()
                | (F.length(F.trim(F.col(text_col))) == 0), F.lit(0)) \
         .otherwise(F.size(toks))
@@ -199,6 +202,8 @@ def tfidf_top_terms(df: DataFrame, vocab: DataFrame,
     test-pinned against."""
     if impl == "arrow":
         return _tfidf_top_terms_arrow(df, vocab, k, text_col, id_col)
+    if impl != "catalyst":
+        raise ValueError(f"unknown impl {impl!r}")
     toks = _token_rows(df, text_col, id_col)
     # n_docs = docs with >= 1 token == docs with non-blank text: count
     # it on the CORPUS (one narrow scan) instead of a count_distinct
