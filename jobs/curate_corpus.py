@@ -8,8 +8,10 @@ document fell out — the artifact a data-quality review actually needs:
     <out>/corpus/   doc_id, lang, source, text (PII-redacted),
                     n_tokens, quality_score
     <out>/rejects/  doc_id, reason in {exact_duplicate,
-                    substring_duplicate, contaminated, benchmark,
-                    low_quality}
+                    substring_duplicate, benchmark, contaminated,
+                    low_quality, gopher:<first failing rule>
+                    (--gopher-gate; gopher:null_text for a NULL
+                    text), c4:<page rule> (--c4-clean)}
 
 Example:
 
@@ -17,10 +19,11 @@ Example:
         jobs/curate_corpus.py --input /root/testdata/sf0.001 \
         --out /tmp/xjs-curate
 
-The funnel gates are the oracle-checked operators (exact-dup
-survivors, substring dedup, decontamination, quality thresholds); the
-job adds reason attribution and the redaction pass, prints one JSON
-summary line, and is deterministic end-to-end.
+The funnel is ``select.curate_decisions`` (exact-dup survivors,
+substring dedup, decontamination, quality thresholds, each an
+oracle-checked operator run once) plus the optional Gopher / C4 gates;
+the job materializes that one decision frame once, writes both outputs
+from it, prints one JSON summary line, and is deterministic end-to-end.
 """
 
 from __future__ import annotations
@@ -30,8 +33,18 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _gate(frame: DataFrame, verdicts: DataFrame) -> DataFrame:
+    """Join a later gate's per-doc ``gate`` reason (NULL = pass) onto the
+    funnel frame; it only decides rows the funnel left undecided."""
+    return (
+        frame.join(verdicts, "doc_id", "left")
+        .withColumn("reason", F.coalesce("reason", "gate"))
+        .drop("gate")
+    )
 
 
 def main() -> None:
@@ -55,108 +68,65 @@ def main() -> None:
     spark = SparkSession.builder.appName("xjs-curate-corpus").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    from xjs.pipeline.decontam import BENCH_RESIDUE, contaminated_docs
-    from xjs.pipeline.dedup import substring_duplicates
     from xjs.pipeline.pii import redact
-    from xjs.pipeline.select import MIN_STOPWORD_RATIO, MIN_TOKENS
-    from xjs.pipeline.text import quality_features
+    from xjs.pipeline.select import curate_decisions
 
     t0 = time.time()
     docs = spark.read.parquet(f"{args.input}/documents.parquet")
 
-    # funnel with reason attribution (first failing gate wins)
-    survivors = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    base = docs.join(survivors.select("doc_id"), "doc_id")
-    exact_rej = docs.join(survivors.select("doc_id"), "doc_id", "left_anti").select(
-        "doc_id", F.lit("exact_duplicate").alias("reason")
-    )
-
-    substr_ids = substring_duplicates(base).select("doc_id")
-    bench_rej = base.filter(F.col("doc_id") % BENCH_RESIDUE == 0).join(
-        substr_ids, "doc_id", "left_anti"
-    ).select("doc_id", F.lit("benchmark").alias("reason"))
-    substr_rej = substr_ids.select("doc_id", F.lit("substring_duplicate").alias("reason"))
-
-    bench = base.filter(F.col("doc_id") % BENCH_RESIDUE == 0)
-    corpus = base.filter(F.col("doc_id") % BENCH_RESIDUE != 0).join(
-        substr_ids, "doc_id", "left_anti"
-    )
-    contam_ids = contaminated_docs(corpus, bench).select("doc_id")
-    contam_rej = contam_ids.select("doc_id", F.lit("contaminated").alias("reason"))
-
-    gated = corpus.join(contam_ids, "doc_id", "left_anti")
-    feats = quality_features(gated)
-    quality_ok = (F.col("n_tokens") >= MIN_TOKENS) & (
-        F.col("stopword_ratio") >= MIN_STOPWORD_RATIO
-    )
-    low_q_rej = feats.filter(~quality_ok).select(
-        "doc_id", F.lit("low_quality").alias("reason")
-    )
-    kept_ids = feats.filter(quality_ok).select("doc_id", "n_tokens", "quality_score")
-
-    rejects = exact_rej.unionByName(substr_rej).unionByName(bench_rej).unionByName(
-        contam_rej
-    ).unionByName(low_q_rej)
-
-    kept_docs = docs.join(kept_ids, "doc_id")
+    # one row per input doc; reason = first failing gate, NULL = kept.
+    # The heuristic gates are row-local, so they read the input scan
+    # rather than the funnel frame (which would re-derive the funnel);
+    # their verdict only counts on rows the funnel left undecided.
+    frame = curate_decisions(docs)
+    text = F.col("text")
     if args.gopher_gate:
         from xjs.pipeline.heuristics import gopher_features
 
-        gf = gopher_features(kept_docs.select("doc_id", "text"))
+        gf = gopher_features(docs.select("doc_id", "text"))
         # null text -> NULL keep (features propagate null); coalesce so
         # such rows are REJECTED with an explicit reason instead of
         # vanishing from the exact accounting
-        keep_b = F.coalesce(F.col("keep"), F.lit(False))
         first_fail = F.when(
             F.col("fail_rules") == "", F.lit("null_text")
         ).otherwise(F.split("fail_rules", ",")[0])
-        rejects = rejects.unionByName(
-            gf.filter(~keep_b).select(
-                "doc_id",
-                F.concat(F.lit("gopher:"), first_fail).alias("reason"),
-            )
-        )
-        kept_docs = kept_docs.join(
-            gf.filter(keep_b).select("doc_id"), "doc_id"
-        )
+        frame = _gate(frame, gf.select("doc_id", F.when(
+            ~F.coalesce(F.col("keep"), F.lit(False)),
+            F.concat(F.lit("gopher:"), first_fail),
+        ).alias("gate")))
     if args.c4_clean:
         from xjs.pipeline.heuristics import c4_stats
 
-        cs = c4_stats(kept_docs.select("doc_id", "text"))
-        rejects = rejects.unionByName(
-            cs.filter(~F.col("keep")).select(
-                "doc_id",
-                F.concat(F.lit("c4:"), F.col("reason")).alias("reason"),
-            )
-        )
-        kept_docs = (
-            kept_docs.drop("text")
-            .join(
-                cs.filter("keep").select(
-                    "doc_id", F.col("clean_text").alias("text")
-                ),
-                "doc_id",
-            )
-        )
+        cs = c4_stats(docs.select("doc_id", "text"))
+        frame = _gate(frame, cs.select("doc_id", F.when(
+            ~F.col("keep"), F.concat(F.lit("c4:"), F.col("reason")),
+        ).alias("gate"), "clean_text"))
+        text = F.col("clean_text")
 
-    kept = kept_docs.select(
+    kept = F.col("reason").isNull()
+    decided = frame.select(
         "doc_id",
         "lang",
         "source",
-        redact(F.col("text")).alias("text"),
+        F.when(kept, redact(text)).alias("text"),
         "n_tokens",
         "quality_score",
-    )
-
-    kept.write.mode("overwrite").parquet(f"{args.out}/corpus")
-    rejects.write.mode("overwrite").parquet(f"{args.out}/rejects")
-
-    reject_counts = {
-        r["reason"]: r["n"]
-        for r in spark.read.parquet(f"{args.out}/rejects")
-        .groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_kept = spark.read.parquet(f"{args.out}/corpus").count()
+        "reason",
+    ).persist()
+    try:
+        corpus = decided.filter(kept).drop("reason")
+        # isNotNull (not ~kept) lets Spark write `reason` as non-nullable
+        rejects = decided.filter(F.col("reason").isNotNull()).select("doc_id", "reason")
+        corpus.write.mode("overwrite").parquet(f"{args.out}/corpus")
+        rejects.write.mode("overwrite").parquet(f"{args.out}/rejects")
+        reject_counts = {
+            r["reason"]: r["n"]
+            for r in decided.groupBy("reason")
+            .agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+    finally:
+        decided.unpersist()
+    n_kept = reject_counts.pop(None, 0)
     n_in = docs.count()
     summary = {
         "job": "curate_corpus",

@@ -25,8 +25,15 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an observation that reads its row count once the
+    action that consumes it (here: its write) has run."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def main() -> None:
@@ -40,7 +47,9 @@ def main() -> None:
     ap.add_argument(
         "--quarantine", action="store_true",
         help="also route rows: clean rows -> <out>/clean, violating "
-             "rows + failed-check names -> <out>/dirty",
+             "rows + failed-check names -> <out>/dirty; both sinks are "
+             "rewritten over the whole table on every run, also when "
+             "the checkpoint skips partitions",
     )
     ap.add_argument(
         "--expect-schema", default=None, metavar="DDL",
@@ -93,10 +102,12 @@ def main() -> None:
         from xjs.runtime import quarantine as _quarantine
 
         clean, dirty = _quarantine(wp, plan)
+        clean, n_clean = _counted(clean)
+        dirty, n_dirty = _counted(dirty)
         clean.write.mode("overwrite").parquet(f"{args.out}/clean")
         dirty.write.mode("overwrite").parquet(f"{args.out}/dirty")
-        summary["n_clean"] = spark.read.parquet(f"{args.out}/clean").count()
-        summary["n_quarantined"] = spark.read.parquet(f"{args.out}/dirty").count()
+        summary["n_clean"] = n_clean.get["n"]
+        summary["n_quarantined"] = n_dirty.get["n"]
 
     if not args.skip_engine_checks:
         eng = {}
@@ -125,8 +136,9 @@ def main() -> None:
             categorical_cols=["lang"], timestamp_cols=["warc_ts"],
             mode="approx",
         )
+        st, n_stats = _counted(st)
         st.write.mode("overwrite").parquet(f"{args.out}/stats")
-        eng["stats_partitions"] = st.count()
+        eng["stats_partitions"] = n_stats.get["n"]
         summary["engine_checks"] = eng
 
     summary["wall_sec"] = round(time.perf_counter() - t0, 2)

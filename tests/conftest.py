@@ -25,6 +25,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def job_main():
+    """Loader of ``main`` from ``jobs/<name>.py`` (a script, not a
+    package module), for running a job in-process."""
+    import importlib.util
+
+    def load(name):
+        spec = importlib.util.spec_from_file_location(
+            f"job_{name}", os.path.join(REPO, "jobs", f"{name}.py"))
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.main
+
+    return load
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 

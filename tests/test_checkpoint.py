@@ -1,6 +1,5 @@
 """Checkpoint/resume: kill-and-resume equivalence, idempotent re-run."""
 
-import importlib.util
 import json
 import os
 import shutil
@@ -65,6 +64,20 @@ def test_resume_after_partial_run(spark, sf_dir, out_dir):
     assert by_run == {"r1": 8, "r2": 8}
 
 
+def test_resume_report_counts_only_input_partitions(spark, sf_dir, out_dir):
+    """Committed partitions absent from the input are not "skipped":
+    total = skipped + processed for every input."""
+    wp = webpages(spark, sf_dir)
+    plan = compile_plan(wp)
+    CheckpointedRun(spark, out_dir, run_id="c1").run(
+        wp.filter(F.col("partition_id") < 8), plan)
+
+    rep = CheckpointedRun(spark, out_dir, run_id="c2").run(
+        wp.filter(F.col("partition_id").isin(2, 9)), plan)
+    assert (rep.partitions_total, rep.partitions_skipped,
+            rep.partitions_processed) == (2, 1, 1)
+
+
 def test_reprocessing_partition_is_idempotent(spark, sf_dir, out_dir):
     """Dynamic partition overwrite: re-running a partition replaces its
     output rather than duplicating it (crash-between-write-and-commit
@@ -82,16 +95,8 @@ def test_reprocessing_partition_is_idempotent(spark, sf_dir, out_dir):
     assert run2.violations().count() == n1
 
 
-def _job_main(name):
-    """``main`` of ``jobs/<name>.py`` (a script, not a package module)."""
-    spec = importlib.util.spec_from_file_location(
-        f"job_{name}", os.path.join(REPO, "jobs", f"{name}.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.main
-
-
-def test_validate_job_resumes_with_quarantine(spark, sf_dir, out_dir, monkeypatch, capsys):
+def test_validate_job_resumes_with_quarantine(spark, sf_dir, out_dir, job_main,
+                                              monkeypatch, capsys):
     """jobs/validate_webpages.py ``main()`` resuming an interrupted
     CheckpointedRun into the same --out with --quarantine: only the
     remaining partitions run, the clean and dirty sinks equal the
@@ -104,7 +109,7 @@ def test_validate_job_resumes_with_quarantine(spark, sf_dir, out_dir, monkeypatc
     CheckpointedRun(spark, out_dir, run_id="vq1").run(
         wp.filter(F.col("partition_id") < 8), plan)
 
-    main = _job_main("validate_webpages")
+    main = job_main("validate_webpages")
     monkeypatch.setattr(sys, "argv", [
         "validate_webpages.py", "--input", sf_dir, "--out", out_dir,
         "--run-id", "vq2", "--quarantine"])
@@ -124,6 +129,8 @@ def test_validate_job_resumes_with_quarantine(spark, sf_dir, out_dir, monkeypatc
     assert (summary["run_id"], summary["partitions_skipped"],
             summary["partitions_processed"]) == ("vq2", 8, 8)
     assert summary["n_violations"] == violations(wp, plan).count()
+    assert summary["engine_checks"]["stats_partitions"] == (
+        wp.select("partition_id").distinct().count())
 
     b_clean, b_dirty = quarantine(wp, plan)
     s_clean = spark.read.parquet(f"{out_dir}/clean")

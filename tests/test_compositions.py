@@ -156,3 +156,38 @@ def test_quality_survivor_matches_driver_oracle(spark, sf_dir):
             best[c] = (key, r["doc_id"])
     for r in rows:
         assert r["keep"] == (best[r["cluster"]][1] == r["doc_id"])
+
+
+def test_curate_decisions_reason_precedence(spark):
+    """The first failing gate names a rejected doc, in the order
+    exact_duplicate, substring_duplicate, benchmark, contaminated,
+    low_quality; a kept doc reads NULL."""
+    from xjs.pipeline import select
+
+    def words(tag, n):  # n tokens, half stopwords, unique to ``tag``
+        return " ".join(f"the {tag}w{k}" for k in range(n // 2))
+
+    doc1 = words("a", 40)
+    rows = [
+        (1, doc1),                                   # shares grams with 41
+        (2, "the short text"),
+        (3, "the short text"),                       # copy of 2, also short
+        (4, words("b", 40)),
+        (5, None),                                   # NULL quality verdict
+        (41, " ".join(doc1.split()[:16]) + " " + words("c", 24)),
+        (82, words("d", 40)),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: r.reason for r in select.curate_decisions(docs).collect()}
+    assert got == {
+        1: "contaminated",
+        2: "low_quality",
+        3: "exact_duplicate",          # not low_quality
+        4: None,
+        5: "low_quality",              # rejected, not silently kept
+        41: "substring_duplicate",     # not benchmark
+        82: "benchmark",
+    }
+    kept = select.curate_corpus(docs)
+    assert kept.columns == ["doc_id", "n_tokens", "stopword_ratio", "quality_score"]
+    assert [r.doc_id for r in kept.collect()] == [4]

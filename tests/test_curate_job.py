@@ -6,6 +6,7 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -100,3 +101,55 @@ def test_curate_job_heuristic_gates(tmp, spark):
     for r in kept.select("text").limit(20).collect():
         for line in r.text.split("\n"):
             assert line and line[-1] in '.!?"', line
+
+
+def _run_curate(job_main, monkeypatch, capsys, argv):
+    monkeypatch.setattr(sys, "argv", ["curate_corpus.py", *argv])
+    job_main("curate_corpus")()
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_curate_job_corpus_is_select_funnel(spark, sf_dir, tmp, job_main,
+                                            monkeypatch, capsys):
+    """Without the heuristic gates the job's corpus is exactly
+    ``select.curate_corpus`` over the same documents, and every other
+    document is in the reject ledger."""
+    from xjs.pipeline import select
+
+    out = os.path.join(tmp, "out")
+    summary = _run_curate(job_main, monkeypatch, capsys,
+                          ["--input", sf_dir, "--out", out])
+    assert summary["accounted"] is True
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    want = {r.doc_id for r in select.curate_corpus(docs).select("doc_id").collect()}
+    got = {r.doc_id for r in spark.read.parquet(f"{out}/corpus").select("doc_id").collect()}
+    rejected = {r.doc_id for r in spark.read.parquet(f"{out}/rejects").select("doc_id").collect()}
+    assert got == want and want
+    assert got.isdisjoint(rejected)
+    assert len(got) + len(rejected) == summary["input_docs"]
+
+
+# Spark jobs one in-process main() pass launches on sf0.001 with both
+# heuristic gates (local[4], 8 shuffle partitions): 59 when each output
+# write and summary count re-ran the funnel, 26 with the decision frame
+# materialized once.  The bound sits between the two.
+MAX_CURATE_JOBS = 40
+
+
+def test_curate_job_runs_each_gate_once(spark, sf_dir, tmp, job_main,
+                                        monkeypatch, capsys):
+    """Guard against the funnel being recomputed per output: the whole
+    job (both gates on) stays under a Spark job budget."""
+    sc = spark.sparkContext
+    group = "curate-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        summary = _run_curate(
+            job_main, monkeypatch, capsys,
+            ["--input", sf_dir, "--out", os.path.join(tmp, "out"),
+             "--gopher-gate", "--c4-clean"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary["accounted"] is True
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= MAX_CURATE_JOBS, n_jobs

@@ -148,7 +148,7 @@ class CheckpointedRun:
         return ResumeReport(
             run_id=self.run_id,
             partitions_total=len(universe),
-            partitions_skipped=len(done),
+            partitions_skipped=len(universe) - len(remaining),
             partitions_processed=len(remaining),
         )
 

@@ -141,34 +141,31 @@ def webpages_drift_ks(spark, sf_dir: str) -> DataFrame:
     return ks(h, base, "partition_id", N_BUCKETS)
 
 
-def oracle_drift_histogram_sql(cte: str) -> str:
+def _hist_sql() -> str:
+    """The per-(partition, bucket) count query over ``webpages`` — the
+    DuckDB twin of ``histogram`` + ``bucketize``."""
     step = (TEXT_LEN_HI - TEXT_LEN_LO) / N_BUCKETS
     return f"""
-WITH {cte}
-SELECT partition_id,
-       CAST(LEAST(GREATEST(FLOOR((length(text) - {TEXT_LEN_LO}) / {step}), 0), {N_BUCKETS - 1}) AS INTEGER) AS bucket,
-       COUNT(*) AS n
-FROM webpages
-GROUP BY 1, 2
-"""
+    SELECT partition_id,
+           CAST(LEAST(GREATEST(FLOOR((length(text) - {TEXT_LEN_LO}) / {step}), 0), {N_BUCKETS - 1}) AS INTEGER) AS bucket,
+           COUNT(*) AS n
+    FROM webpages GROUP BY 1, 2"""
 
 
-def oracle_drift_psi_sql(cte: str) -> str:
-    step = (TEXT_LEN_HI - TEXT_LEN_LO) / N_BUCKETS
-    nb = N_BUCKETS
+def _oracle_joined_sql(cte: str) -> str:
+    """``WITH`` chain shared by the PSI and KS oracles: ``hist``, its
+    all-partition ``base``, the dense (partition x bucket) ``spine`` and
+    ``j`` = (partition_id, bucket, n_p, n_q) with absent buckets as 0 —
+    the DuckDB twin of ``_spine_join``."""
     return f"""
 WITH {cte},
-hist AS (
-    SELECT partition_id,
-           CAST(LEAST(GREATEST(FLOOR((length(text) - {TEXT_LEN_LO}) / {step}), 0), {nb - 1}) AS INTEGER) AS bucket,
-           COUNT(*) AS n
-    FROM webpages GROUP BY 1, 2
+hist AS ({_hist_sql()}
 ),
 base AS (SELECT bucket, SUM(n) AS n FROM hist GROUP BY 1),
 spine AS (
     SELECT p.partition_id, b.bucket
     FROM (SELECT DISTINCT partition_id FROM hist) p
-    CROSS JOIN (SELECT UNNEST(RANGE({nb})) AS bucket) b
+    CROSS JOIN (SELECT UNNEST(RANGE({N_BUCKETS})) AS bucket) b
 ),
 j AS (
     SELECT s.partition_id, s.bucket,
@@ -176,7 +173,19 @@ j AS (
     FROM spine s
     LEFT JOIN hist h ON h.partition_id = s.partition_id AND h.bucket = s.bucket
     LEFT JOIN base ON base.bucket = s.bucket
-),
+)"""
+
+
+def oracle_drift_histogram_sql(cte: str) -> str:
+    return f"""
+WITH {cte}
+{_hist_sql().strip()}
+"""
+
+
+def oracle_drift_psi_sql(cte: str) -> str:
+    nb = N_BUCKETS
+    return f"""{_oracle_joined_sql(cte)},
 probs AS (
     SELECT partition_id,
            (n_p + {EPS}) / (SUM(n_p) OVER (PARTITION BY partition_id) + {EPS} * {nb}) AS pp,
@@ -189,29 +198,7 @@ FROM probs GROUP BY partition_id
 
 
 def oracle_drift_ks_sql(cte: str) -> str:
-    step = (TEXT_LEN_HI - TEXT_LEN_LO) / N_BUCKETS
-    nb = N_BUCKETS
-    return f"""
-WITH {cte},
-hist AS (
-    SELECT partition_id,
-           CAST(LEAST(GREATEST(FLOOR((length(text) - {TEXT_LEN_LO}) / {step}), 0), {nb - 1}) AS INTEGER) AS bucket,
-           COUNT(*) AS n
-    FROM webpages GROUP BY 1, 2
-),
-base AS (SELECT bucket, SUM(n) AS n FROM hist GROUP BY 1),
-spine AS (
-    SELECT p.partition_id, b.bucket
-    FROM (SELECT DISTINCT partition_id FROM hist) p
-    CROSS JOIN (SELECT UNNEST(RANGE({nb})) AS bucket) b
-),
-j AS (
-    SELECT s.partition_id, s.bucket,
-           COALESCE(h.n, 0) AS n_p, COALESCE(base.n, 0) AS n_q
-    FROM spine s
-    LEFT JOIN hist h ON h.partition_id = s.partition_id AND h.bucket = s.bucket
-    LEFT JOIN base ON base.bucket = s.bucket
-),
+    return f"""{_oracle_joined_sql(cte)},
 cdfs AS (
     SELECT partition_id,
            SUM(n_p) OVER (PARTITION BY partition_id ORDER BY bucket)

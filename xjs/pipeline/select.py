@@ -72,32 +72,56 @@ WHERE f.n_tokens >= {MIN_TOKENS} AND f.stopword_ratio >= {MIN_STOPWORD_RATIO}
 # decontamination gates to the quality + exact-survivor pipeline
 # ---------------------------------------------------------------------------
 
-def curate_corpus(docs: DataFrame) -> DataFrame:
-    """The complete curation funnel as ONE declarative query:
-    exact-dup survivor ∧ not-a-substring-duplicate ∧ not contaminated
-    ∧ quality gates.  All gates are the already-oracle-checked
-    operators; the anti-joins are left_anti on small flagged sets
-    (Catalyst broadcasts them when they fit)."""
+def curate_decisions(docs: DataFrame) -> DataFrame:
+    """The complete curation funnel as ONE frame: every input row with
+    its ``n_tokens``, ``stopword_ratio``, ``quality_score`` and a
+    ``reason`` — NULL for a kept document, else the first failing gate
+    in the order exact_duplicate (not the min doc_id of its text),
+    substring_duplicate (among the exact survivors), benchmark
+    (``doc_id % BENCH_RESIDUE == 0``), contaminated (shares a gram with
+    a benchmark document), low_quality.  Each gate operator runs once
+    (all are the already-oracle-checked operators) and its flags are
+    left-joined back on doc_id, so the precedence is one CASE."""
     from xjs.pipeline.decontam import BENCH_RESIDUE, contaminated_docs
     from xjs.pipeline.dedup import substring_duplicates
 
     survivors = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     base = docs.join(survivors.select("doc_id"), "doc_id")
-
-    substr_dups = substring_duplicates(base).select("doc_id")
-    bench = base.filter(F.col("doc_id") % BENCH_RESIDUE == 0)
-    corpus = base.filter(F.col("doc_id") % BENCH_RESIDUE != 0)
-    contaminated = contaminated_docs(corpus, bench).select("doc_id")
-
-    kept = (
-        corpus.join(substr_dups, "doc_id", "left_anti")
-        .join(contaminated, "doc_id", "left_anti")
+    bench = F.col("doc_id") % BENCH_RESIDUE == 0
+    flags = {
+        "_survivor": survivors,
+        "_substr": substring_duplicates(base),
+        "_contam": contaminated_docs(base.filter(~bench), base.filter(bench)),
+    }
+    out = docs.join(
+        quality_features(docs).select(
+            "doc_id", "n_tokens", "stopword_ratio", "quality_score"),
+        "doc_id",
     )
-    feats = quality_features(kept)
-    return feats.filter(
-        (F.col("n_tokens") >= MIN_TOKENS)
-        & (F.col("stopword_ratio") >= MIN_STOPWORD_RATIO)
-    ).select("doc_id", "n_tokens", "stopword_ratio", "quality_score")
+    for name, ids in flags.items():
+        out = out.join(ids.select("doc_id", F.lit(True).alias(name)), "doc_id", "left")
+    quality_ok = (F.col("n_tokens") >= MIN_TOKENS) & (
+        F.col("stopword_ratio") >= MIN_STOPWORD_RATIO
+    )
+    reason = (
+        F.when(F.col("_survivor").isNull(), "exact_duplicate")
+        .when(F.col("_substr"), "substring_duplicate")
+        .when(bench, "benchmark")
+        .when(F.col("_contam"), "contaminated")
+        # a NULL gate verdict (null text) rejects instead of vanishing
+        .when(~F.coalesce(quality_ok, F.lit(False)), "low_quality")
+    )
+    return out.withColumn("reason", reason).drop(*flags)
+
+
+def curate_corpus(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, stopword_ratio, quality_score) of the docs the
+    funnel keeps."""
+    return (
+        curate_decisions(docs)
+        .filter(F.col("reason").isNull())
+        .select("doc_id", "n_tokens", "stopword_ratio", "quality_score")
+    )
 
 
 def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
