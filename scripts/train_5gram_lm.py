@@ -25,10 +25,15 @@ from __future__ import annotations
 
 import math
 import pickle
+import sys
 from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from xjs.pipeline.text import split_tokens  # noqa: E402
+
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = REPO / "xjs" / "pipeline" / "artifacts" / "fivegram_lm.pkl"
 SCALE = 1_000_000
@@ -44,7 +49,7 @@ def train(corpus_path: str = CORPUS) -> dict:
     uni: Counter = Counter()
     grams: dict[int, Counter] = {n: Counter() for n in (2, 3, 4, 5)}
     for t in sorted(texts):  # sorted: independent of row order on disk
-        toks = t.split()
+        toks = split_tokens(t)
         uni.update(toks)
         for n in (2, 3, 4, 5):
             grams[n].update(

@@ -19,10 +19,15 @@ from __future__ import annotations
 
 import math
 import pickle
+import sys
 from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from xjs.pipeline.text import split_tokens  # noqa: E402
+
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = REPO / "xjs" / "pipeline" / "artifacts" / "bigram_lm.pkl"
 SCALE = 1_000_000  # micro-nats
@@ -35,7 +40,7 @@ def train(corpus_path: str = CORPUS) -> dict:
     uni: Counter = Counter()
     bi: Counter = Counter()
     for t in sorted(texts):  # sorted: independent of row order on disk
-        toks = t.split()
+        toks = split_tokens(t)
         uni.update(toks)
         bi.update(zip(toks, toks[1:]))
 

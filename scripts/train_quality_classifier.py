@@ -26,11 +26,16 @@ from __future__ import annotations
 
 import hashlib
 import pickle
+import sys
 from pathlib import Path
 
 import numpy as np
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from xjs.pipeline.text import split_tokens  # noqa: E402
+
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = REPO / "xjs" / "pipeline" / "artifacts" / "quality_lr.pkl"
 
@@ -48,12 +53,12 @@ def bucket(token: str) -> int:
 def corrupt(text: str) -> str:
     """The stated negative-class formula (mirrored by the fixture and
     the oracle): every whitespace token prefixed 'zz'."""
-    return " ".join("zz" + t for t in text.split())
+    return " ".join("zz" + t for t in split_tokens(text))
 
 
 def featurize(text: str) -> np.ndarray:
     x = np.zeros(B, dtype=np.float64)
-    for t in text.split():
+    for t in split_tokens(text):
         x[bucket(t)] += 1.0
     return x
 
@@ -64,7 +69,7 @@ def train(corpus_path: str = CORPUS) -> dict:
     texts = [
         t for t in pq.read_table(corpus_path, columns=["text"])
         .column("text").to_pylist()
-        if t is not None and t.strip()
+        if t is not None and t.strip(" ")  # the kernel's blank rule
     ]
     xs = np.stack([featurize(t) for t in texts]
                   + [featurize(corrupt(t)) for t in texts])

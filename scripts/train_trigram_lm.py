@@ -21,10 +21,15 @@ from __future__ import annotations
 
 import math
 import pickle
+import sys
 from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from xjs.pipeline.text import split_tokens  # noqa: E402
+
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = REPO / "xjs" / "pipeline" / "artifacts" / "trigram_lm.pkl"
 SCALE = 1_000_000
@@ -40,7 +45,7 @@ def train(corpus_path: str = CORPUS) -> dict:
     bi: Counter = Counter()
     tri: Counter = Counter()
     for t in sorted(texts):  # sorted: independent of row order on disk
-        toks = t.split()
+        toks = split_tokens(t)
         uni.update(toks)
         bi.update(zip(toks, toks[1:]))
         tri.update(zip(toks, toks[1:], toks[2:]))

@@ -12,18 +12,20 @@ Python mirrors below use ``re.ASCII`` to mirror that.
 
 import re
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from xjs.pipeline import text, urls
 
 
 def py_tokens(s: str):
-    t = s.strip()
-    return re.split(r"\s+", t, flags=re.ASCII) if True else []
+    """Spark ``split(trim(s), '\\s+')``: trim strips U+0020 only, and
+    empty leading/trailing fields are kept."""
+    return re.split(r"\s+", s.strip(" "), flags=re.ASCII)
 
 
 def py_token_count(s: str) -> int:
-    return 0 if len(s.strip()) == 0 else len(py_tokens(s))
+    return 0 if len(s.strip(" ")) == 0 else len(py_tokens(s))
 
 
 def py_bpe_count(s: str) -> int:
@@ -41,6 +43,8 @@ CASES = [
     "nbsp joined stays",
     "tab\tand\nnewline mix\r\nhere",
     "a a a a a",
+    "\ta b",
+    "a\x1cb",
 ]
 
 
@@ -54,6 +58,50 @@ def test_token_counts_match_python(spark):
     for i, s in enumerate(CASES):
         assert got[i][0] == py_token_count(s), f"ws count mismatch on {s!r}"
         assert got[i][1] == py_bpe_count(s), f"bpe count mismatch on {s!r}"
+
+
+def _engine_tokens(spark, engine, cases):
+    """(tokens, token_count) per case from one engine's definition."""
+    if engine == "python":
+        return [(text.split_tokens(s), None) for s in cases]
+    if engine == "arrow":
+        import pyarrow as pa
+
+        flat, off = text.arrow_tokens(pa.array(cases, type=pa.string()))
+        flat = flat.to_pylist()
+        return [(flat[off[i]:off[i + 1]], None) for i in range(len(cases))]
+    if engine == "catalyst":
+        df = spark.createDataFrame(list(enumerate(cases)), "i int, t string")
+        rows = df.select("i", text.tokens(F.col("t")).alias("k"),
+                         text.token_count(F.col("t")).alias("n")).collect()
+        got = {r["i"]: (r["k"], r["n"]) for r in rows}
+        return [got[i] for i in range(len(cases))]
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE c (i INTEGER, t VARCHAR)")
+    con.executemany("INSERT INTO c VALUES (?, ?)", list(enumerate(cases)))
+    rows = con.execute(
+        f"SELECT {text.tokens_sql('t')}, {text.token_count_sql('t')} "
+        "FROM c ORDER BY i").fetchall()
+    return [(k, n) for k, n in rows]
+
+
+@pytest.mark.parametrize("engine", ["catalyst", "arrow", "python", "duckdb"])
+def test_tokenizer_engines_agree_with_mirror(spark, engine):
+    """Every engine's tokenizer equals the mirror on every case.  NULL:
+    the Catalyst and DuckDB forms propagate it; the Arrow and Python
+    helpers read it as '' (one empty token) and leave null policy to
+    their callers."""
+    cases = CASES + [None]
+    got = _engine_tokens(spark, engine, cases)
+    for s, (toks, n) in zip(cases, got):
+        if s is None and engine in ("catalyst", "duckdb"):
+            assert toks is None and n is None, (engine, toks, n)
+            continue
+        assert list(toks) == py_tokens(s or ""), f"{engine} tokens on {s!r}"
+        if n is not None:
+            assert n == py_token_count(s), f"{engine} count on {s!r}"
 
 
 def test_ngrams_match_python(spark):

@@ -27,7 +27,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline import state
-from xjs.pipeline.text import token_ngrams, tokens
+from xjs.pipeline.text import (
+    ngrams, ngrams_sql, token_ngrams, token_windows_sql, tokens, tokens_sql,
+)
 
 NGRAM = 5
 THRESH_NUM, THRESH_DEN = 1, 4   # boilerplate = gram in >= 25% of the group's docs
@@ -107,22 +109,12 @@ def edge_grams(text: Column, n: int = NGRAM, edge_tokens: int = 32) -> Column:
     toks = tokens(text)
     cnt = F.size(toks)
 
-    def grams_of(arr: Column) -> Column:
-        c = F.size(arr)
-        return F.when(
-            c >= n,
-            F.transform(
-                F.sequence(F.lit(1), c - n + 1),
-                lambda i: F.array_join(F.slice(arr, i, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
     head = F.slice(toks, 1, edge_tokens)
     tail = F.slice(toks, -edge_tokens, edge_tokens)
     return F.when(
         cnt <= 2 * edge_tokens,
         F.array_distinct(token_ngrams(text, n)),
-    ).otherwise(F.array_distinct(F.concat(grams_of(head), grams_of(tail))))
+    ).otherwise(F.array_distinct(F.concat(ngrams(head, n), ngrams(tail, n))))
 
 
 def boilerplate_grams_edges(
@@ -455,20 +447,8 @@ FROM corpus c LEFT JOIN gram_lists g USING (source)
 
 def oracle_boilerplate_grams_edges_sql() -> str:
     w, e = NGRAM, 32
-    full = (
-        f"CASE WHEN len(t) >= {w} "
-        f"THEN list_transform(range(1, len(t) - {w} + 2), "
-        f"i -> array_to_string(t[i:i+{w - 1}], ' ')) "
-        f"ELSE [] END"
-    )
-    head_grams = (
-        f"list_transform(range(1, {e} - {w} + 2), "
-        f"i -> array_to_string(head[i:i+{w - 1}], ' '))"
-    )
-    tail_grams = (
-        f"list_transform(range(1, {e} - {w} + 2), "
-        f"i -> array_to_string(tail[i:i+{w - 1}], ' '))"
-    )
+    full, head_grams, tail_grams = (
+        ngrams_sql(arr, w) for arr in ("t", "head", "tail"))
     return f"""
 WITH injected AS (
     SELECT doc_id, source, {_EDGE_INJECT_SQL} AS text
@@ -476,7 +456,7 @@ WITH injected AS (
           FROM documents)
 ),
 toks AS (
-    SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS t
+    SELECT doc_id, source, {tokens_sql('text')} AS t
     FROM injected WHERE length(trim(text)) > 0
 ),
 sliced AS (
@@ -515,15 +495,14 @@ WITH injected AS (
     SELECT doc_id, source, {_INJECT_SQL} AS text FROM documents
 ),
 toks AS (
-    SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS t
+    SELECT doc_id, source, {tokens_sql('text')} AS t
     FROM injected WHERE length(trim(text)) > 0
 ),
 grams AS (
     -- DISTINCT per (doc, gram): each doc votes once per gram, and
     -- duplicate-text docs still vote separately (doc_id carried)
-    SELECT DISTINCT doc_id, source,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
+    SELECT DISTINCT doc_id, source, gram
+    FROM ({token_windows_sql('toks', w, 'doc_id, source')})
 ),
 doc_grams AS (
     SELECT source, gram, COUNT(*) AS n_docs_with

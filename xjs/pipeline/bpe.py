@@ -34,12 +34,14 @@ import re
 from pyspark.sql import DataFrame
 
 from xjs.pipeline.model_artifact import PKG_PREFIX, load
+from xjs.pipeline.text import WS_CHARS
 
-# python mirror of text.BPE_PATTERN ("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]")
-# with Java's ASCII \s class spelled out — python \s is unicode-aware
-# and would diverge from the Catalyst pre-tokenizer on NBSP and friends
-_JAVA_WS = " \t\n\x0b\f\r"
-_PRETOK = re.compile(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9" + _JAVA_WS + r"]")
+#: text.BPE_PATTERN ("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]") with Java's
+#: ASCII \s spelled out as text.WS_CHARS — python \s is unicode-aware
+#: and would diverge from the Catalyst pre-tokenizer on NBSP and
+#: friends; the same string is the RE2 pattern of the DuckDB oracle
+_PRETOK_SQL = f"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9{WS_CHARS}]"
+_PRETOK = re.compile(_PRETOK_SQL)
 
 DEFAULT_BPE = PKG_PREFIX + "bpe_small.pkl"
 BPE_VERSION = 1
@@ -277,10 +279,6 @@ def q_pack_sequences_bpe(spark, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DuckDB oracles — an exact SQL mirror of BPE merge application
 # ---------------------------------------------------------------------------
-
-#: RE2 spelling of _PRETOK for DuckDB (Java/python \s mirrored as the
-#: explicit ASCII class so all three engines pre-tokenize identically)
-_PRETOK_SQL = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0b\f\r]"
 
 
 def _bpe_counts_cte(artifact: str = DEFAULT_BPE) -> str:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xjs.pipeline.text import token_ngrams
+from xjs.pipeline.text import token_ngrams, token_windows_sql, tokens_sql
 
 NGRAM = 4           # gram width (tokens)
 BENCH_RESIDUE = 41  # doc_id % RESIDUE == 0 -> benchmark doc
@@ -116,21 +116,23 @@ def q_decontaminate_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contaminated_docs_tau(corpus, bench)
 
 
-def oracle_decontaminate_tau_sql() -> str:
-    w = NGRAM
+def _grams_ctes() -> str:
+    """toks -> distinct (doc_id, gram) -> the benchmark gram set."""
     return f"""
 WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+    SELECT doc_id, {tokens_sql('text')} AS t
     FROM documents
 ),
 grams AS (
-    SELECT DISTINCT doc_id,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
+    SELECT DISTINCT doc_id, gram FROM ({token_windows_sql('toks', NGRAM)})
 ),
 bench AS (
     SELECT DISTINCT gram FROM grams WHERE doc_id % {BENCH_RESIDUE} = 0
-)
+)"""
+
+
+def oracle_decontaminate_tau_sql() -> str:
+    return _grams_ctes() + f"""
 SELECT g.doc_id, COUNT(*) AS n_doc_grams, COUNT(b.gram) AS n_hit_grams,
        ROUND(COUNT(b.gram)::DOUBLE / COUNT(*), 4) AS overlap_frac
 FROM grams g LEFT JOIN bench b ON g.gram = b.gram
@@ -142,20 +144,7 @@ HAVING COUNT(b.gram) >= 1
 
 
 def oracle_decontaminate_sql() -> str:
-    w = NGRAM
-    return f"""
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-    FROM documents
-),
-grams AS (
-    SELECT DISTINCT doc_id,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
-),
-bench AS (
-    SELECT DISTINCT gram FROM grams WHERE doc_id % {BENCH_RESIDUE} = 0
-)
+    return _grams_ctes() + f"""
 SELECT g.doc_id, COUNT(*) AS n_hit_grams
 FROM grams g JOIN bench b USING (gram)
 WHERE g.doc_id % {BENCH_RESIDUE} <> 0
@@ -182,23 +171,13 @@ def contaminated_spans(
     contaminated_docs), so flagging is join-free on the corpus side of
     the shuffle ledger; islands merge under a doc-keyed window bounded
     by document length."""
-    from pyspark.sql.window import Window
-
+    from xjs.pipeline.dedup import merge_spans
     from xjs.pipeline.grams import ngram_pos_rows
 
     bench = doc_grams(benchmark, text_col, id_col, n).select("gram").distinct()
     pos = ngram_pos_rows(corpus, [id_col], text_col, n)
     flagged = pos.join(F.broadcast(bench), "gram").select(id_col, "pos")
-    win = Window.partitionBy(id_col).orderBy("pos")
-    prev = F.lag("pos").over(win)
-    brk = F.when(prev.isNull() | (F.col("pos") > prev + n), 1).otherwise(0)
-    with_span = flagged.withColumn("_brk", brk).withColumn(
-        "_sid", F.sum("_brk").over(win)
-    )
-    return with_span.groupBy(id_col, "_sid").agg(
-        F.min("pos").alias("token_start"),
-        (F.max("pos") + n).alias("token_end"),
-    ).select(id_col, "token_start", "token_end")
+    return merge_spans(flagged, n, id_col)
 
 
 def decontaminate_spans(
@@ -222,52 +201,21 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_decontaminate_spans_sql() -> str:
+    from xjs.pipeline.dedup import span_merge_sql, span_remove_sql
+
     w = NGRAM
+    bench, corpus = (f"doc_id % {BENCH_RESIDUE} {op} 0" for op in ("=", "<>"))
     return f"""
 WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+    SELECT doc_id, {tokens_sql('text')} AS t
     FROM documents
 ),
 bench AS (
-    SELECT DISTINCT list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
-    WHERE doc_id % {BENCH_RESIDUE} = 0
+    SELECT DISTINCT gram FROM ({token_windows_sql('toks', w, where=bench)})
 ),
-posgrams AS (
-    SELECT doc_id, i - 1 AS pos,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
-    WHERE doc_id % {BENCH_RESIDUE} <> 0
-),
+posgrams AS ({token_windows_sql('toks', w, where=corpus)}),
 flagged AS (
     SELECT p.doc_id, p.pos FROM posgrams p JOIN bench b USING (gram)
 ),
-islands AS (
-    SELECT doc_id, pos,
-           CASE WHEN lag(pos) OVER w IS NULL
-                     OR pos > lag(pos) OVER w + {w} THEN 1 ELSE 0 END AS brk
-    FROM flagged
-    WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-spans AS (
-    SELECT doc_id, MIN(pos) AS token_start, MAX(pos) + {w} AS token_end
-    FROM (SELECT doc_id, pos,
-                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-          FROM islands)
-    GROUP BY doc_id, sid
-),
-kept AS (
-    SELECT tk.doc_id, tk.i, tk.tok
-    FROM (SELECT doc_id, i, t[i] AS tok
-          FROM toks, unnest(range(1, len(t) + 1)) AS r(i)
-          WHERE doc_id % {BENCH_RESIDUE} <> 0) tk
-    LEFT JOIN spans s
-      ON s.doc_id = tk.doc_id
-     AND tk.i - 1 >= s.token_start AND tk.i - 1 < s.token_end
-    WHERE s.doc_id IS NULL
-)
-SELECT c.doc_id, COALESCE(k.clean_text, '') AS clean_text
-FROM (SELECT doc_id FROM documents WHERE doc_id % {BENCH_RESIDUE} <> 0) c
-LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text
-           FROM kept GROUP BY doc_id) k USING (doc_id)
-"""
+{span_merge_sql(w)},
+{span_remove_sql(f"(SELECT doc_id FROM documents WHERE {corpus})")}"""

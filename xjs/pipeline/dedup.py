@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline.hashing import MOD, char_hash, char_hash_sql, hash_params
-from xjs.pipeline.text import tokens
+from xjs.pipeline.text import WS_CHARS, token_windows_sql, tokens, tokens_sql
 
 SHINGLE = 3          # tokens per shingle
 K = 12               # minhash functions
@@ -117,8 +117,8 @@ def normalize_text(col: Column) -> Column:
     Spark and DuckDB answers byte-identical without relying on the two
     engines' unicode casefold tables agreeing)."""
     s = F.lower(col)
-    s = F.regexp_replace(s, r"[^a-z0-9 \t\n\x0b\f\r]+", "")
-    return F.trim(F.regexp_replace(s, r"[ \t\n\x0b\f\r]+", " "))
+    s = F.regexp_replace(s, f"[^a-z0-9{WS_CHARS}]+", "")
+    return F.trim(F.regexp_replace(s, f"[{WS_CHARS}]+", " "))
 
 
 def normalized_duplicates(
@@ -154,7 +154,7 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalized_duplicates(d.unionAll(variants))
 
 
-ORACLE_DEDUP_NORMALIZED_SQL = r"""
+ORACLE_DEDUP_NORMALIZED_SQL = rf"""
 WITH corpus AS (
     SELECT doc_id, text FROM documents
     UNION ALL
@@ -164,8 +164,8 @@ WITH corpus AS (
 normed AS (
     SELECT doc_id,
            md5(trim(regexp_replace(
-               regexp_replace(lower(text), '[^a-z0-9 \t\n\x0b\f\r]+', '', 'g'),
-               '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS norm_md5
+               regexp_replace(lower(text), '[^a-z0-9{WS_CHARS}]+', '', 'g'),
+               '[{WS_CHARS}]+', ' ', 'g'))) AS norm_md5
     FROM corpus
 )
 SELECT norm_md5, COUNT(*) AS n_docs, MIN(doc_id) AS keep_doc_id
@@ -178,6 +178,11 @@ FROM normed GROUP BY 1 HAVING COUNT(*) >= 2
 # --------------------------------------------------------------------------
 
 def _tokens(col: Column) -> Column:
+    """Minhash shingle tokens: a split on the single space, mirrored in
+    DuckDB by ``string_split(text, ' ')``.  Deliberately not
+    ``text.tokens``: shingles only need a rule both engines compute
+    byte-identically, and a one-character split is the cheapest such
+    rule in either engine (no regex, no trim)."""
     return F.split(col, " ")
 
 
@@ -771,8 +776,6 @@ def substring_spans(
     double-cutter recompute documented there; span merging is gaps-
     and-islands over (doc, pos) — one doc-keyed window whose
     partitions are bounded by document length, never corpus-sized."""
-    from pyspark.sql.window import Window
-
     from xjs.pipeline.grams import ngram_pos_rows
 
     _check_hash_mode(hash_mode)
@@ -787,15 +790,27 @@ def substring_spans(
         .filter(F.col(id_col) > F.col("_owner"))
         .select(id_col, "pos")
     )
+    return merge_spans(flagged, w, id_col)
+
+
+def merge_spans(flagged: DataFrame, width: int, id_col: str = "doc_id") -> DataFrame:
+    """(id, token_start, token_end): the maximal spans covered by the
+    flagged ``width``-wide windows ``(id, pos)``, half-open — gaps and
+    islands: a window starting past ``prev + width`` opens a new span,
+    so overlapping and adjacent windows merge.  One doc-keyed window
+    whose partitions are bounded by document length (DuckDB:
+    ``span_merge_sql``)."""
+    from pyspark.sql.window import Window
+
     win = Window.partitionBy(id_col).orderBy("pos")
     prev = F.lag("pos").over(win)
-    brk = F.when(prev.isNull() | (F.col("pos") > prev + w), 1).otherwise(0)
+    brk = F.when(prev.isNull() | (F.col("pos") > prev + width), 1).otherwise(0)
     with_span = flagged.withColumn("_brk", brk).withColumn(
         "_sid", F.sum("_brk").over(win)
     )
     return with_span.groupBy(id_col, "_sid").agg(
         F.min("pos").alias("token_start"),
-        (F.max("pos") + w).alias("token_end"),
+        (F.max("pos") + width).alias("token_end"),
     ).select(id_col, "token_start", "token_end")
 
 
@@ -849,12 +864,10 @@ def oracle_dedup_substring_sql() -> str:
     return f"""
 WITH {DUCKDB_CORPUS_CTE.strip()},
 toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
+    SELECT doc_id, {tokens_sql('text')} AS t FROM corpus
 ),
 grams AS (
-    SELECT DISTINCT doc_id,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
+    SELECT DISTINCT doc_id, gram FROM ({token_windows_sql('toks', w)})
 ),
 owners AS (
     SELECT gram, MIN(doc_id) AS owner FROM grams GROUP BY gram
@@ -866,21 +879,56 @@ GROUP BY g.doc_id
 """
 
 
+def span_merge_sql(width: int, start: str = "token_start",
+                   end: str = "token_end") -> str:
+    """DuckDB form of ``merge_spans``: the ``islands`` and ``spans``
+    CTEs over a ``flagged(doc_id, pos)`` CTE."""
+    return f"""islands AS (
+    SELECT doc_id, pos,
+           CASE WHEN lag(pos) OVER w IS NULL
+                     OR pos > lag(pos) OVER w + {width} THEN 1 ELSE 0 END AS brk
+    FROM flagged
+    WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+),
+spans AS (
+    SELECT doc_id, MIN(pos) AS {start}, MAX(pos) + {width} AS {end}
+    FROM (SELECT doc_id, pos,
+                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
+          FROM islands)
+    GROUP BY doc_id, sid
+)"""
+
+
+def span_remove_sql(docs: str) -> str:
+    """DuckDB form of ``substring_remove`` over the CTEs ``toks(doc_id,
+    t)`` and ``spans``: a ``kept`` CTE, then (doc_id, clean_text) for
+    every doc of ``docs``."""
+    return f"""kept AS (
+    SELECT tk.doc_id, tk.pos, tk.gram AS tok
+    FROM ({token_windows_sql('toks', 1)}) tk
+    LEFT JOIN spans s
+      ON s.doc_id = tk.doc_id
+     AND tk.pos >= s.token_start AND tk.pos < s.token_end
+    WHERE s.doc_id IS NULL
+)
+SELECT c.doc_id, COALESCE(k.clean_text, '') AS clean_text
+FROM {docs} c
+LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
+           FROM kept GROUP BY doc_id) k USING (doc_id)
+"""
+
+
 def _substring_spans_ctes() -> str:
     """Shared CTE chain: corpus -> positioned grams -> owners ->
-    flagged window positions -> gaps-and-islands -> maximal spans
-    (0-based half-open token indices, matching substring_spans)."""
+    flagged window positions -> maximal spans (0-based half-open token
+    indices, matching substring_spans)."""
     w = SUBSTR_W
     return f"""
 WITH {DUCKDB_CORPUS_CTE.strip()},
 toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
+    SELECT doc_id, {tokens_sql('text')} AS t FROM corpus
 ),
-posgrams AS (
-    SELECT doc_id, i - 1 AS pos,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
-),
+posgrams AS ({token_windows_sql('toks', w)}),
 owners AS (
     SELECT gram, MIN(doc_id) AS owner FROM posgrams GROUP BY gram
 ),
@@ -889,20 +937,7 @@ flagged AS (
     FROM posgrams p JOIN owners o USING (gram)
     WHERE p.doc_id > o.owner
 ),
-islands AS (
-    SELECT doc_id, pos,
-           CASE WHEN lag(pos) OVER w IS NULL
-                     OR pos > lag(pos) OVER w + {w} THEN 1 ELSE 0 END AS brk
-    FROM flagged
-    WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-spans AS (
-    SELECT doc_id, MIN(pos) AS token_start, MAX(pos) + {w} AS token_end
-    FROM (SELECT doc_id, pos,
-                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-          FROM islands)
-    GROUP BY doc_id, sid
-)
+{span_merge_sql(w)}
 """
 
 
@@ -913,18 +948,4 @@ SELECT doc_id, token_start, token_end FROM spans
 
 
 def oracle_substring_remove_sql() -> str:
-    return _substring_spans_ctes() + """
-, kept AS (
-    SELECT tk.doc_id, tk.i, tk.tok
-    FROM (SELECT doc_id, i, t[i] AS tok
-          FROM toks, unnest(range(1, len(t) + 1)) AS r(i)) tk
-    LEFT JOIN spans s
-      ON s.doc_id = tk.doc_id
-     AND tk.i - 1 >= s.token_start AND tk.i - 1 < s.token_end
-    WHERE s.doc_id IS NULL
-)
-SELECT c.doc_id, COALESCE(k.clean_text, '') AS clean_text
-FROM corpus c
-LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text
-           FROM kept GROUP BY doc_id) k USING (doc_id)
-"""
+    return _substring_spans_ctes() + ", " + span_remove_sql("corpus")

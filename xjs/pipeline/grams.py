@@ -14,29 +14,26 @@ per-doc DISTINCT folded into the same pass.  Measured on the bench
 corpus (100k docs, local[32]): 8.9s HOF vs 4.5s Scala ml.NGram vs
 2.2s this builder, identical output rows.
 
-Tokenizer parity: the Python splitter mirrors Spark's
-``split(trim(text), '\\s+')`` exactly — strip ASCII spaces only (Spark
-``trim`` strips 0x20 only), split on the Java-default ``\\s`` class
-``[ \\t\\n\\x0b\\f\\r]+`` (Java regex ``\\s`` is ASCII-only; Python's
-unicode-aware ``str.split()`` would diverge on NBSP and friends), keep
-leading/trailing empty fields like ``F.split``'s limit=-1.  The
-equivalence is pinned against the HOF form on edge-case strings in
-tests/test_grams.py, and every oracle-checked query using this
-builder proves it against DuckDB's ``regexp_split_to_array`` again.
+Tokenizer: ``split_tokens`` / ``arrow_tokens`` and ``window_starts``
+from xjs.pipeline.text, the Python, Arrow and numpy forms of
+``tokens`` / ``ngrams``.  The equivalence is pinned against the HOF
+form on edge-case strings in tests/test_grams.py, and every
+oracle-checked query using this builder proves it against DuckDB's
+``regexp_split_to_array`` again.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+from xjs.pipeline.text import (
+    arrow_tokens, ragged_ranges, split_tokens, window_starts,
+)
 
 # Default cutter implementation.  'native' keeps the whole batch in
-# Arrow C++/numpy — ascii_split_whitespace (measured 6x RE2's
-# split_pattern_regex, byte-identical fields incl. empties), window
+# Arrow C++/numpy — text.arrow_tokens, window
 # gather via take, separator join, and the per-doc DISTINCT as C++ hash
 # group_bys, zero per-doc Python (see _native_gram_parts); 'python' is
 # the per-doc loop kept as the equivalence reference (pinned against
@@ -62,34 +59,17 @@ def _resolve_impl(impl: str, edge_tokens: int | None) -> str:
     return impl
 
 
-def _ragged_ranges(starts, lengths):
-    """Vectorized expansion of per-segment (start, length) pairs into one
-    flat position array: concat(range(s0, s0+l0), range(s1, s1+l1), ...).
-    The numpy idiom for cutting every gram window of every doc without a
-    Python loop."""
-    import numpy as np
-
-    total = int(lengths.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    seg_ids = np.repeat(np.arange(len(lengths)), lengths)
-    excl = np.concatenate(([0], np.cumsum(lengths)[:-1]))
-    local = np.arange(total, dtype=np.int64) - excl[seg_ids]
-    return np.repeat(starts, lengths) + local, seg_ids
-
-
 def _native_gram_parts(batch, text_idx: int, n: int, edge_tokens: int | None):
     """Core of the native cutter: one Arrow RecordBatch in, flat
     (row_ids, local_pos, gram StringArray) out, with per-doc semantics
     identical to _gram_set / the per-doc python loop:
 
     - doc skipped when text is null or '' (``if not txt``),
-    - strip ASCII space only (Spark ``trim`` parity),
-    - split on the Java-``\\s`` class, keeping empty fields,
+    - tokens from ``text.arrow_tokens``,
     - full mode: every window position; edge mode: head/tail windows of
       long docs, full set for docs of <= 2*edge_tokens tokens.
 
-    Everything runs batch-wide: split_pattern_regex (C++ RE2), numpy
+    Everything runs batch-wide: text.arrow_tokens, numpy
     ragged-range window enumeration, Arrow ``take`` gathers of the n
     shifted token columns, and one binary_join_element_wise for the
     space join — per-batch cost is O(tokens + output grams) with no
@@ -103,25 +83,15 @@ def _native_gram_parts(batch, text_idx: int, n: int, edge_tokens: int | None):
     valid = pc.fill_null(pc.not_equal(text, ""), False).to_numpy(
         zero_copy_only=False
     )
-    trimmed = pc.utf8_trim(pc.fill_null(text, ""), characters=" ")
-    # ascii_split_whitespace == re.split('[ \t\n\x0b\f\r]+') field-for-
-    # field (keeps empty fields, ASCII-only so NBSP stays inside tokens
-    # — Java-\s parity), and measured 6x RE2's split_pattern_regex
-    lists = pc.ascii_split_whitespace(trimmed)
-    counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
-    counts = counts.astype(np.int64)
-    tok_offsets = np.concatenate(([0], np.cumsum(counts)))
-    flat = pc.list_flatten(lists)
+    flat, tok_offsets = arrow_tokens(text)
 
     # gram-window start positions, local to each doc
-    eff = np.where(valid, counts, 0)
-    full_m = np.maximum(eff - n + 1, 0)
+    eff = np.where(valid, np.diff(tok_offsets), 0)
     if edge_tokens is None:
-        local_pos, row_ids = _ragged_ranges(
-            np.zeros(ndocs, dtype=np.int64), full_m
-        )
+        local_pos, row_ids = window_starts(eff, n)
     else:
         e = edge_tokens
+        full_m = np.maximum(eff - n + 1, 0)
         long_doc = eff > 2 * e
         win_m = max(e - n + 1, 0)
         head_len = np.where(long_doc, win_m, full_m)
@@ -130,7 +100,7 @@ def _native_gram_parts(batch, text_idx: int, n: int, edge_tokens: int | None):
             (np.zeros(ndocs, dtype=np.int64), np.maximum(eff - e, 0))
         )
         lens = np.concatenate((head_len, tail_len))
-        local_pos, seg_ids = _ragged_ranges(starts, lens)
+        local_pos, seg_ids = ragged_ranges(starts, lens)
         row_ids = np.where(seg_ids >= ndocs, seg_ids - ndocs, seg_ids)
         order = np.argsort(row_ids, kind="stable")
         row_ids, local_pos = row_ids[order], local_pos[order]
@@ -216,28 +186,27 @@ def _gram_set(txt: str | None, n: int, edge_tokens: int | None) -> set[str]:
 
     Edge mode never tokenizes the middle of a long document: the head
     comes from a ``maxsplit``-bounded split and the tail from the same
-    bounded split over the REVERSED string (regex whitespace runs are
-    palindromic under the ``[ \\t\\n\\x0b\\f\\r]`` class, so splitting
+    bounded split over the REVERSED string (runs of the
+    ``text.WS_CHARS`` class are palindromic, so splitting
     the reversal from the left == splitting the original from the
     right).  On 600-token pages this cut the edge path 4x vs splitting
     the whole text — per-doc cost scales with the edge window, not the
     page length."""
     if not txt:
         return set()
-    s = txt.strip(" ")
     if edge_tokens is None:
-        toks = _WS.split(s)
+        toks = split_tokens(txt)
         if len(toks) < n:
             return set()
         return _grams_of(toks, n)
     e = edge_tokens
-    head_parts = _WS.split(s, maxsplit=2 * e)
+    head_parts = split_tokens(txt, 2 * e)
     if len(head_parts) <= 2 * e:  # short doc: exact full gram set
         if len(head_parts) < n:
             return set()
         return _grams_of(head_parts, n)
     head = head_parts[:e]
-    rev = _WS.split(s[::-1], maxsplit=e)
+    rev = split_tokens(txt[::-1], e)
     tail = [t[::-1] for t in rev[:e]][::-1]
     return _grams_of(head, n) | _grams_of(tail, n)
 
@@ -370,7 +339,7 @@ def ngram_pos_rows(
     (0-based; NOT distinct, unlike ngram_rows), for span-grain
     consumers (substring span removal needs to know WHERE a duplicated
     window sits, not just that it exists).  Same Arrow-batched narrow
-    map stage and Java-``\\s`` tokenizer parity as ngram_rows."""
+    map stage and tokenizer as ngram_rows."""
     if _resolve_impl(impl, None) == "native":
         return _native_batches(df, keys, text_col, n, None, "pos")
     import pandas as pd  # noqa: F401
@@ -392,7 +361,7 @@ def ngram_pos_rows(
                 txt = row[0]
                 if not txt:
                     continue
-                toks = _WS.split(txt.strip(" "))
+                toks = split_tokens(txt)
                 m = len(toks) - n + 1
                 if m <= 0:
                     continue

@@ -67,7 +67,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xjs.pipeline.text import tokens
+from xjs.pipeline.text import arrow_tokens, tokens, tokens_sql
 
 # ---------------------------------------------------------------------------
 # C4 line-level cleaning
@@ -199,7 +199,7 @@ def oracle_c4_clean_sql() -> str:
     (independent engine, same integer semantics)."""
     keep_line = (
         "l -> right(l, 1) IN ('.', '!', '?', '\"') "
-        "AND len(list_filter(regexp_split_to_array(trim(l), '\\s+'), "
+        f"AND len(list_filter({tokens_sql('l')}, "
         "w -> w != '')) >= " + str(C4_MIN_WORDS) + " "
         "AND NOT contains(lower(l), 'javascript')"
     )
@@ -317,8 +317,8 @@ def _gopher_hof_feats(df, id_col, text_col):
 
 def _gopher_arrow_feats(df, id_col, text_col):
     """Arrow C++/numpy feature kernel (the grams.py pattern): one
-    ``ascii_split_whitespace`` per batch (already proven Java-``\\s``
-    field-identical in grams.py), one '\\n' split, flat per-token /
+    ``text.arrow_tokens`` per batch (trimming drops only empty fields,
+    which every word feature skips), one '\\n' split, flat per-token /
     per-line predicate arrays in C++, and exact empty-safe segment
     sums via cumsum differences — zero per-doc Python, every feature
     from ONE tokenization instead of one re-split per feature (hof).
@@ -347,11 +347,7 @@ def _gopher_arrow_feats(df, id_col, text_col):
             null_mask = pc.is_null(text).to_numpy(zero_copy_only=False)
             t = pc.fill_null(text, "")
 
-            words = pc.ascii_split_whitespace(t)
-            w_off = np.asarray(words.offsets)
-            if w_off.dtype != np.int64:
-                w_off = w_off.astype(np.int64)
-            flat_w = pc.list_flatten(words)
+            flat_w, w_off = arrow_tokens(text)
             nonempty = pc.not_equal(flat_w, "").to_numpy(zero_copy_only=False)
             n_words = seg_sum(nonempty, w_off)
             wlen = pc.utf8_length(flat_w).to_numpy(zero_copy_only=False)
@@ -553,7 +549,7 @@ WITH corpus AS (
     FROM documents
 ), feats AS (
     SELECT doc_id,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+           len(list_filter({tokens_sql('text')},
                w -> w != '')) AS n_words,
            length(regexp_replace(trim(text), '\\s+', '', 'g')) AS word_chars,
            (length(text) - length(replace(text, '#', ''))
@@ -566,12 +562,12 @@ WITH corpus AS (
            len(list_filter(str_split(text, chr(10)),
                l -> ends_with(l, '...') OR ends_with(l, '…')))
                AS ellipsis_lines,
-           len(list_filter(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+           len(list_filter(list_filter({tokens_sql('text')},
                w -> w != ''), w -> regexp_matches(w, '[A-Za-z]')))
                AS alpha_words,
            len(list_filter([{req}],
                rw -> list_contains(list_filter(
-                   regexp_split_to_array(trim(text), '\\s+'),
+                   {tokens_sql('text')},
                    w -> w != ''), rw)))::INT AS stop_hits
     FROM corpus
 )

@@ -39,7 +39,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_WS = r"[ \t\n\x0b\f\r]"
+from xjs.pipeline.text import WS_CHARS
+
+_WS = f"[{WS_CHARS}]"
 
 #: (entity, replacement) — order is the contract; &amp; strictly last
 ENTITIES = [

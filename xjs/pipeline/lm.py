@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline.model_artifact import PKG_PREFIX, load
-from xjs.pipeline.text import tokens
+from xjs.pipeline.text import arrow_tokens, tokens, tokens_sql, window_starts
 
 DEFAULT_LM = PKG_PREFIX + "bigram_lm.pkl"
 DEFAULT_LM3 = PKG_PREFIX + "trigram_lm.pkl"
@@ -155,30 +155,21 @@ def _score_kernel(
         for batch in batches:
             text = batch.column(1 + len(carry))
             nrows = len(text)
-            trimmed = pc.utf8_trim(pc.fill_null(text, ""),
-                                   characters=" ")
-            lists = pc.ascii_split_whitespace(trimmed)
-            counts = pc.list_value_length(lists).to_numpy(
-                zero_copy_only=False).astype(np.int64)
+            flat, tok_off = arrow_tokens(text)
             # null text -> no transitions (split(trim(null)) is null);
             # eff masks them while tok_off keeps flat-buffer alignment
             eff = np.where(
                 pc.is_valid(text).to_numpy(zero_copy_only=False),
-                counts, 0)
-            flat = pc.list_flatten(lists)
+                np.diff(tok_off), 0)
             ids = pc.fill_null(
                 pc.index_in(flat, value_set=voc_arr), n_voc
             ).to_numpy(zero_copy_only=False).astype(np.uint64)
-            tok_off = np.concatenate(([0], np.cumsum(counts)))[:-1]
             m = np.maximum(eff - (kmax - 1), 0)
             n_trans = m.copy()
             lp_sum = np.zeros(nrows, dtype=np.int64)
             total = int(m.sum())
             if total:
-                from xjs.pipeline.grams import _ragged_ranges
-
-                local, seg = _ragged_ranges(
-                    np.zeros(nrows, dtype=np.int64), m)
+                local, seg = window_starts(eff, kmax)
                 g = tok_off[seg] + local
                 lp = np.full(total, lp_oov, dtype=np.int64)
                 undecided = np.ones(total, dtype=bool)
@@ -398,14 +389,14 @@ WITH corpus AS (
     SELECT {corpus_cols},
            CASE WHEN doc_id % 9 = 0
                 THEN array_to_string(list_transform(
-                         regexp_split_to_array(trim(text), '\\s+'),
+                         {tokens_sql('text')},
                          t -> t || t), ' ')
                 ELSE text END AS text
     FROM documents
 ),
 {lms},
 toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
+    SELECT doc_id, {tokens_sql('text')} AS t FROM corpus
 ),
 trans AS (
     SELECT doc_id, {windows}

@@ -131,7 +131,7 @@ def predict_series(model: dict, texts) -> "object":
     import numpy as np
     import pandas as pd
 
-    from xjs.pipeline.grams import _ragged_ranges
+    from xjs.pipeline.text import ragged_ranges
 
     lp = model["log_prob"]
     prior = model["log_prior"]
@@ -157,7 +157,7 @@ def predict_series(model: dict, texts) -> "object":
             lens = np.array([len(b) for b in bufs], dtype=np.int64)
             flat = np.frombuffer(b"".join(bufs), dtype=np.uint8)
             offsets = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            g, seg = _ragged_ranges(offsets, lens - n + 1)
+            g, seg = ragged_ranges(offsets, lens - n + 1)
             h = np.zeros(len(g), dtype=np.uint64)
             for j in range(n):  # same horner hash as _bucket_ids
                 h = h * np.uint64(257) + flat[g + j].astype(np.uint64)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from xjs.pipeline.text import token_count, tokens
+from xjs.pipeline.text import token_count, token_count_sql, tokens, tokens_sql
 
 BUDGET = 256  # tokens per training bin (tiny for the word-salad corpus)
 
@@ -137,10 +137,7 @@ def q_pack_sequences_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 def oracle_pack_sequences_global_sql() -> str:
     """The oracle states the SEMANTICS (one global prefix sum); the
     Spark side must make its chunked two-stage computation equal it."""
-    n_tok = (
-        "(CASE WHEN length(trim(text)) = 0 THEN 0 "
-        "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)"
-    )
+    n_tok = f"({token_count_sql('text')})"
     return f"""
 WITH toks AS (
     SELECT doc_id, CAST({n_tok} AS BIGINT) AS n_tokens FROM documents
@@ -158,10 +155,7 @@ FROM cum
 
 
 def oracle_pack_sequences_sql() -> str:
-    n_tok = (
-        "(CASE WHEN length(trim(text)) = 0 THEN 0 "
-        "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)"
-    )
+    n_tok = f"({token_count_sql('text')})"
     return f"""
 WITH toks AS (
     SELECT doc_id, lang, CAST({n_tok} AS BIGINT) AS n_tokens FROM documents
@@ -256,7 +250,7 @@ WITH corpus AS (
           FROM documents)
 ),
 toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM corpus
+    SELECT doc_id, {tokens_sql('text')} AS t FROM corpus
 ),
 chunks AS (
     SELECT doc_id, t, len(t) AS n,

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xjs.pipeline.model_artifact import PKG_PREFIX, load
-from xjs.pipeline.text import tokens
+from xjs.pipeline.text import arrow_tokens, tokens, tokens_sql
 
 DEFAULT_QC = PKG_PREFIX + "quality_lr.pkl"
 
@@ -158,30 +158,25 @@ def _classifier_scores_arrow(
             n_out = len(ids)
             if n_out == 0:
                 continue
-            trimmed = pc.filter(
-                pc.utf8_trim(pc.fill_null(text, ""), characters=" "),
-                notnull)
-            nonblank = pc.greater(pc.utf8_length(trimmed), 0)
-            nb_np = nonblank.to_numpy(zero_copy_only=False)
-            n_tokens = np.zeros(n_out, dtype=np.int64)
+            # null rows are dropped; a blank row (length(trim) = 0)
+            # scores no tokens
+            texts = text.filter(notnull)
+            nonblank = pc.greater(pc.utf8_length(
+                pc.utf8_trim(texts, characters=" ")), 0).to_numpy(
+                    zero_copy_only=False)
+            flat, off = arrow_tokens(texts)
+            counts = np.diff(off)
+            n_tokens = np.where(nonblank, counts, 0)
             wsum = np.zeros(n_out, dtype=np.int64)
-            toks_texts = pc.filter(trimmed, nonblank)
-            if len(toks_texts):
-                lists = pc.ascii_split_whitespace(toks_texts)
-                counts = pc.list_value_length(lists).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                flat = pc.list_flatten(lists)
-                row_map = np.flatnonzero(nb_np)
-                n_tokens[row_map] = counts
-                enc = pc.dictionary_encode(flat)
-                uniq = enc.dictionary.to_pylist()
-                wu = w[np.fromiter((_bucket_of(t, n_buckets) for t in uniq),
-                                   dtype=np.int64, count=len(uniq))]
-                wvals = wu[enc.indices.to_numpy(
-                    zero_copy_only=False).astype(np.int64)]
-                rows = row_map[np.repeat(
-                    np.arange(len(toks_texts), dtype=np.int64), counts)]
-                np.add.at(wsum, rows, wvals)
+            rows = np.repeat(np.arange(n_out, dtype=np.int64), counts)
+            kept = nonblank[rows]
+            enc = pc.dictionary_encode(flat)
+            uniq = enc.dictionary.to_pylist()
+            wu = w[np.fromiter((_bucket_of(t, n_buckets) for t in uniq),
+                               dtype=np.int64, count=len(uniq))]
+            wvals = wu[enc.indices.to_numpy(
+                zero_copy_only=False).astype(np.int64)]
+            np.add.at(wsum, rows[kept], wvals[kept])
             yield pa.RecordBatch.from_arrays(
                 [ids,
                  pa.array(n_tokens, type=pa.int64()),
@@ -252,14 +247,14 @@ corpus AS (
     SELECT doc_id,
            CASE WHEN doc_id % 9 = 0 THEN array_to_string(
                     list_transform(
-                        regexp_split_to_array(trim(text), '\\s+'),
+                        {tokens_sql('text')},
                         t -> 'zz' || t), ' ')
                 ELSE text END AS text
     FROM documents WHERE text IS NOT NULL
 ),
 toks AS (
     SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+           unnest({tokens_sql('text')}) AS tok
     FROM corpus WHERE length(trim(text)) > 0
 ),
 scored AS (

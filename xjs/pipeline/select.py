@@ -9,7 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xjs.pipeline.text import STOPWORDS, quality_features
+from xjs.pipeline.text import (
+    quality_features, quality_features_sql, token_windows_sql, tokens_sql,
+)
 
 MIN_TOKENS = 30
 MIN_STOPWORD_RATIO = 0.05
@@ -42,24 +44,7 @@ def oracle_select_training_sql() -> str:
 
     return f"""
 WITH {DUCKDB_CORPUS_CTE.strip()},
-t AS (
-    SELECT doc_id, text,
-           length(text) AS n_chars,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-               x -> list_contains({STOPWORDS!r}, x))) AS n_stop,
-           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
-    FROM corpus
-),
-feats AS (
-    SELECT doc_id, n_tokens,
-           ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) AS stopword_ratio,
-           ROUND(LEAST(n_tokens / 100.0, 1.0) * 0.4
-                 + ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) * 0.4
-                 + (1 - ROUND(n_punct / GREATEST(n_chars, 1)::DOUBLE, 4)) * 0.2, 4) AS quality_score
-    FROM t
-),
+feats AS ({quality_features_sql('corpus')}),
 survivors AS (SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY text)
 SELECT f.doc_id, f.n_tokens, f.stopword_ratio, f.quality_score
 FROM feats f JOIN survivors s ON s.doc_id = f.doc_id
@@ -137,9 +122,7 @@ def oracle_curate_corpus_sql() -> str:
     def grams_cte(name: str, w: int) -> str:
         return f"""
 {name} AS (
-    SELECT DISTINCT doc_id,
-           list_aggregate(t[i:i+{w - 1}], 'string_agg', ' ') AS gram
-    FROM toks, unnest(range(1, len(t) - {w} + 2)) AS r(i)
+    SELECT DISTINCT doc_id, gram FROM ({token_windows_sql('toks', w)})
 )"""
 
     return f"""
@@ -147,7 +130,7 @@ WITH {DUCKDB_CORPUS_CTE.strip()},
 survivors AS (SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY text),
 base AS (SELECT c.* FROM corpus c JOIN survivors s USING (doc_id)),
 toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM base
+    SELECT doc_id, {tokens_sql('text')} AS t FROM base
 ),
 {grams_cte('sgrams', SUBSTR_W).strip()},
 owners AS (SELECT gram, MIN(doc_id) AS own FROM sgrams GROUP BY gram),
@@ -169,23 +152,8 @@ kept AS (
       AND b.doc_id NOT IN (SELECT doc_id FROM substr_dups)
       AND b.doc_id NOT IN (SELECT doc_id FROM contaminated)
 ),
-t2 AS (
-    SELECT doc_id, text,
-           length(text) AS n_chars,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-               x -> list_contains({STOPWORDS!r}, x))) AS n_stop,
-           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
-    FROM kept
-)
-SELECT doc_id, n_tokens,
-       ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) AS stopword_ratio,
-       ROUND(LEAST(n_tokens / 100.0, 1.0) * 0.4
-             + ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) * 0.4
-             + (1 - ROUND(n_punct / GREATEST(n_chars, 1)::DOUBLE, 4)) * 0.2, 4)
-           AS quality_score
+t2 AS ({quality_features_sql('kept')})
+SELECT doc_id, n_tokens, stopword_ratio, quality_score
 FROM t2
-WHERE n_tokens >= {MIN_TOKENS}
-  AND ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) >= {MIN_STOPWORD_RATIO}
+WHERE n_tokens >= {MIN_TOKENS} AND stopword_ratio >= {MIN_STOPWORD_RATIO}
 """

@@ -100,7 +100,7 @@ def _rolling_keys(
     post-filter forms agree bit-for-bit, including non-power-of-two
     moduli where unsigned-% would diverge on hashes >= 2^63;
     test-pinned)."""
-    from xjs.pipeline.grams import _ragged_ranges
+    from xjs.pipeline.text import window_starts
 
     dtypes = dict(df.dtypes)
     schema = f"{id_col} {dtypes[id_col]}, pos int, key long"
@@ -125,10 +125,7 @@ def _rolling_keys(
                     .astype(np.uint64)
                 )
                 n = len(flat)
-                m = np.maximum(counts - k + 1, 0)
-                local_pos, row_ids = _ragged_ranges(
-                    np.zeros(len(counts), dtype=np.int64), m
-                )
+                local_pos, row_ids = window_starts(counts, k)
                 if len(local_pos) == 0:
                     continue
                 offsets = np.concatenate(
@@ -214,22 +211,14 @@ def _anchored(keys: DataFrame, method: str, anchor_mod: int) -> DataFrame:
 
 
 def _spans_from_flagged(flagged: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Gaps-and-islands over flagged window starts: merge windows whose
-    [pos, pos+k) ranges touch or overlap into (id, char_start,
-    char_end) spans, 0-based half-open.  Doc-keyed window, partitions
-    bounded by document length."""
-    from pyspark.sql.window import Window
+    """dedup.merge_spans over flagged 1-based window starts: (id,
+    char_start, char_end) spans, 0-based half-open."""
+    from xjs.pipeline.dedup import merge_spans
 
-    win = Window.partitionBy(id_col).orderBy("pos")
-    prev = F.lag("pos").over(win)
-    brk = F.when(prev.isNull() | (F.col("pos") > prev + k), 1).otherwise(0)
-    with_span = flagged.withColumn("_brk", brk).withColumn(
-        "_sid", F.sum("_brk").over(win)
-    )
-    return with_span.groupBy(id_col, "_sid").agg(
-        (F.min("pos") - 1).alias("char_start"),
-        (F.max("pos") - 1 + k).alias("char_end"),
-    ).select(id_col, "char_start", "char_end")
+    spans = merge_spans(
+        flagged.select(id_col, (F.col("pos") - 1).alias("pos")), k, id_col)
+    return spans.select(id_col, F.col("token_start").alias("char_start"),
+                        F.col("token_end").alias("char_end"))
 
 
 def char_span_duplicates(
@@ -471,7 +460,7 @@ def q_char_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _char_spans_ctes(anchor_mod: int = 1) -> str:
-    from xjs.pipeline.dedup import DUCKDB_CORPUS_CTE
+    from xjs.pipeline.dedup import DUCKDB_CORPUS_CTE, span_merge_sql
 
     k = K_CHARS
     sel = (
@@ -493,24 +482,11 @@ owners AS (
     SELECT key, MIN(doc_id) AS owner FROM wins GROUP BY key
 ),
 flagged AS (
-    SELECT w.doc_id, w.pos
+    SELECT w.doc_id, w.pos - 1 AS pos
     FROM wins w JOIN owners o USING (key)
     WHERE w.doc_id > o.owner
 ),
-islands AS (
-    SELECT doc_id, pos,
-           CASE WHEN lag(pos) OVER w IS NULL
-                     OR pos > lag(pos) OVER w + {k} THEN 1 ELSE 0 END AS brk
-    FROM flagged
-    WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-spans AS (
-    SELECT doc_id, MIN(pos) - 1 AS char_start, MAX(pos) - 1 + {k} AS char_end
-    FROM (SELECT doc_id, pos,
-                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-          FROM islands)
-    GROUP BY doc_id, sid
-)
+{span_merge_sql(k, "char_start", "char_end")}
 """
 
 

@@ -9,6 +9,8 @@ whole-stage-codegen pass as the validation predicates.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +31,24 @@ FP_PREFIX = 256   # fingerprint looks at the first N chars
 FP_GRAM = 5       # char n-gram width
 
 
+# ---------------------------------------------------------------------------
+# the token layer: the tokenizer and its n-gram windows, written once per
+# engine (Catalyst, Python, Arrow, DuckDB SQL)
+# ---------------------------------------------------------------------------
+#
+# The rule: ``trim`` strips U+0020 only, then the text splits on runs of
+# the ASCII ``\s`` class WS_CHARS (NBSP and U+001C are not separators),
+# keeping leading and trailing empty fields (Spark ``split`` limit -1):
+# "\ta b" is ["", "a", "b"].  Every operator and oracle that tokenizes
+# text calls one of the definitions below; tests/test_unicode_edges.py
+# checks the four engines against one Python mirror.
+
+#: Java regex ``\s`` (ASCII only), spelled so Java, RE2 and Python
+#: regexes all read it alike
+WS_CHARS = r" \t\n\x0b\f\r"
+_WS = re.compile(f"[{WS_CHARS}]+")
+
+
 def tokens(col: Column) -> Column:
     return F.split(F.trim(col), "\\s+")
 
@@ -39,11 +59,10 @@ def token_count(col: Column) -> Column:
     )
 
 
-def token_ngrams(col: Column, n: int) -> Column:
-    """Array of space-joined token n-grams; empty when the doc has
-    fewer than ``n`` tokens (guard required: Spark's ``sequence``
-    happily generates a descending range)."""
-    toks = tokens(col)
+def ngrams(toks: Column, n: int) -> Column:
+    """Array of the space-joined ``n``-token windows of a token array;
+    empty when it has fewer than ``n`` tokens (guard required: Spark's
+    ``sequence`` happily generates a descending range)."""
     cnt = F.size(toks)
     return F.when(
         cnt >= n,
@@ -54,10 +73,98 @@ def token_ngrams(col: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def quality_score(t: Column) -> Column:
-    """The combined per-row quality score (same arithmetic as
-    ``quality_features``; kept in lock-step with
-    ``quality_score_sql``)."""
+def token_ngrams(col: Column, n: int) -> Column:
+    """Array of space-joined token n-grams of a text column."""
+    return ngrams(tokens(col), n)
+
+
+def split_tokens(s: str | None, maxsplit: int = 0) -> list[str]:
+    """Python form of ``tokens`` for one string, NULL read as ''
+    (``maxsplit`` bounds the split as in ``re.split``)."""
+    return _WS.split((s or "").strip(" "), maxsplit)
+
+
+def arrow_tokens(text):
+    """Arrow form of ``tokens`` for a string array: the flat tokens of
+    ``split(trim(coalesce(text, '')))`` and int64 offsets, row ``r``
+    owning ``flat[offsets[r]:offsets[r + 1]]``.  A null row comes out
+    as the one empty token of ''; each kernel applies its own policy
+    for null and blank rows.  ``ascii_split_whitespace`` splits on
+    exactly WS_CHARS, keeps empty fields and runs 6x faster than RE2's
+    ``split_pattern_regex``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lists = pc.ascii_split_whitespace(
+        pc.utf8_trim(pc.fill_null(text, ""), characters=" "))
+    counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
+    offsets = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+    return pc.list_flatten(lists), offsets
+
+
+def ragged_ranges(starts, lengths):
+    """Vectorized expansion of per-segment (start, length) pairs into one
+    flat position array: concat(range(s0, s0+l0), range(s1, s1+l1), ...),
+    with the segment id of each position.  The numpy idiom for cutting
+    every window of every doc without a Python loop."""
+    import numpy as np
+
+    total = int(lengths.sum())
+    if total == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    seg_ids = np.repeat(np.arange(len(lengths)), lengths)
+    excl = np.concatenate(([0], np.cumsum(lengths)[:-1]))
+    local = np.arange(total, dtype=np.int64) - excl[seg_ids]
+    return np.repeat(starts, lengths) + local, seg_ids
+
+
+def window_starts(counts, n: int):
+    """(pos, row_ids): the 0-based start of every ``n``-wide window of
+    every row holding ``counts`` items — the numpy form of ``ngrams``."""
+    import numpy as np
+
+    return ragged_ranges(np.zeros(len(counts), dtype=np.int64),
+                         np.maximum(counts - n + 1, 0))
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB form of ``tokens``."""
+    return f"regexp_split_to_array(trim({expr}), '\\s+')"
+
+
+def token_count_sql(expr: str) -> str:
+    """DuckDB form of ``token_count``."""
+    return (f"CASE WHEN length(trim({expr})) = 0 THEN 0 "
+            f"ELSE len({tokens_sql(expr)}) END")
+
+
+def ngrams_sql(arr: str, n: int) -> str:
+    """DuckDB form of ``ngrams`` over a token list expression."""
+    return (f"CASE WHEN len({arr}) >= {n} "
+            f"THEN list_transform(range(1, len({arr}) - {n} + 2), "
+            f"i -> array_to_string({arr}[i:i+{n - 1}], ' ')) ELSE [] END")
+
+
+def token_windows_sql(src: str, n: int, cols: str = "doc_id",
+                      where: str = "") -> str:
+    """DuckDB rows of every ``n``-token window of the token list ``t``
+    of ``src`` (optionally filtered by ``where``): ``cols``, the 0-based
+    window start ``pos`` and the space-joined ``gram`` — the row form
+    of ``ngrams``; ``n = 1`` gives one row per token."""
+    gram = ("t[i]" if n == 1
+            else f"list_aggregate(t[i:i+{n - 1}], 'string_agg', ' ')")
+    return (f"SELECT {cols}, i - 1 AS pos, {gram} AS gram "
+            f"FROM {src}, unnest(range(1, len(t) - {n} + 2)) AS r(i)"
+            + (f" WHERE {where}" if where else ""))
+
+
+# ---------------------------------------------------------------------------
+# quality features, built on the tokenizer
+# ---------------------------------------------------------------------------
+
+def _quality_columns(t: Column) -> dict[str, Column]:
+    """The cheap quality signals of ``quality_features`` and the
+    combined score, one arithmetic for both (DuckDB: ``_quality_sql``)."""
     toks = tokens(t)
     n_tokens = token_count(t)
     n_chars = F.length(t)
@@ -65,60 +172,81 @@ def quality_score(t: Column) -> Column:
     stop_ratio = F.round(n_stop / F.greatest(n_tokens, F.lit(1)).cast("double"), 4)
     n_punct = F.length(t) - F.length(F.regexp_replace(t, "[.,;:!?]", ""))
     punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)).cast("double"), 4)
-    return F.round(
-        F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 0.4
-        + stop_ratio * 0.4
-        + (1 - punct_ratio) * 0.2,
-        4,
+    return {
+        "n_chars": n_chars,
+        "n_tokens": n_tokens,
+        "avg_token_len": F.round(
+            (n_chars - (n_tokens - 1)) / F.greatest(n_tokens, F.lit(1)), 4
+        ),
+        "stopword_ratio": stop_ratio,
+        "punct_ratio": punct_ratio,
+        "quality_score": F.round(
+            F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 0.4
+            + stop_ratio * 0.4
+            + (1 - punct_ratio) * 0.2,
+            4,
+        ),
+    }
+
+
+def quality_score(t: Column) -> Column:
+    """The combined per-row quality score (DuckDB: ``quality_score_sql``)."""
+    return _quality_columns(t)["quality_score"]
+
+
+def _quality_inputs_sql(expr: str) -> tuple[str, str, str, str]:
+    """(n_chars, n_tokens, n_stop, n_punct) of a text expression."""
+    return (
+        f"length({expr})",
+        f"({token_count_sql(expr)})",
+        f"len(list_filter({tokens_sql(expr)}, "
+        f"x -> list_contains({STOPWORDS!r}, x)))",
+        f"(length({expr}) - length(regexp_replace({expr}, '[.,;:!?]', '', 'g')))",
     )
+
+
+def _quality_sql(n_chars: str, n_tokens: str, n_stop: str,
+                 n_punct: str) -> tuple[str, str, str]:
+    """(stopword_ratio, punct_ratio, quality_score) — the DuckDB twin of
+    ``_quality_columns``' arithmetic."""
+    stop_ratio = f"ROUND({n_stop} / GREATEST({n_tokens}, 1)::DOUBLE, 4)"
+    punct_ratio = f"ROUND({n_punct} / GREATEST({n_chars}, 1)::DOUBLE, 4)"
+    score = (
+        f"ROUND(LEAST({n_tokens} / 100.0, 1.0) * 0.4 + {stop_ratio} * 0.4 "
+        f"+ (1 - {punct_ratio}) * 0.2, 4)"
+    )
+    return stop_ratio, punct_ratio, score
 
 
 def quality_score_sql(expr: str) -> str:
     """DuckDB per-row equivalent of ``quality_score`` for any text
     expression."""
-    n_tokens = (
-        f"(CASE WHEN length(trim({expr})) = 0 THEN 0 "
-        f"ELSE len(regexp_split_to_array(trim({expr}), '\\s+')) END)"
-    )
-    n_stop = (
-        f"len(list_filter(regexp_split_to_array(trim({expr}), '\\s+'), "
-        f"x -> list_contains({STOPWORDS!r}, x)))"
-    )
-    n_punct = f"(length({expr}) - length(regexp_replace({expr}, '[.,;:!?]', '', 'g')))"
-    stop_ratio = f"ROUND({n_stop} / GREATEST({n_tokens}, 1)::DOUBLE, 4)"
-    punct_ratio = f"ROUND({n_punct} / GREATEST(length({expr}), 1)::DOUBLE, 4)"
-    return (
-        f"ROUND(LEAST({n_tokens} / 100.0, 1.0) * 0.4 + {stop_ratio} * 0.4 "
-        f"+ (1 - {punct_ratio}) * 0.2, 4)"
-    )
+    return _quality_sql(*_quality_inputs_sql(expr))[2]
+
+
+def quality_features_sql(src: str) -> str:
+    """DuckDB form of ``quality_features`` over the ``doc_id``/``text``
+    rows of ``src``."""
+    n_chars, n_tokens, n_stop, n_punct = _quality_inputs_sql("text")
+    stop_ratio, punct_ratio, score = _quality_sql(
+        "n_chars", "n_tokens", "n_stop", "n_punct")
+    return f"""
+SELECT doc_id, n_chars, n_tokens,
+       ROUND((n_chars - (n_tokens - 1)) / GREATEST(n_tokens, 1), 4) AS avg_token_len,
+       {stop_ratio} AS stopword_ratio,
+       {punct_ratio} AS punct_ratio,
+       {score} AS quality_score
+FROM (SELECT doc_id, {n_chars} AS n_chars, {n_tokens} AS n_tokens,
+             {n_stop} AS n_stop, {n_punct} AS n_punct
+      FROM {src})
+"""
 
 
 def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, n_chars, n_tokens, avg_token_len, stopword_ratio,
     punct_ratio, quality_score) — the classic cheap quality signals."""
-    t = F.col(text_col)
-    toks = tokens(t)
-    n_tokens = token_count(t)
-    n_chars = F.length(t)
-    avg_tok = F.round(
-        (n_chars - (n_tokens - 1)) / F.greatest(n_tokens, F.lit(1)), 4
-    )
-    n_stop = F.size(
-        F.filter(toks, lambda x: x.isin(*STOPWORDS))
-    )
-    stop_ratio = F.round(n_stop / F.greatest(n_tokens, F.lit(1)).cast("double"), 4)
-    n_punct = F.length(t) - F.length(F.regexp_replace(t, "[.,;:!?]", ""))
-    punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)).cast("double"), 4)
-    score = quality_score(t)
-    return df.select(
-        F.col(id_col),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        avg_tok.alias("avg_token_len"),
-        stop_ratio.alias("stopword_ratio"),
-        punct_ratio.alias("punct_ratio"),
-        score.alias("quality_score"),
-    )
+    cols = _quality_columns(F.col(text_col))
+    return df.select(F.col(id_col), *[c.alias(k) for k, c in cols.items()])
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,26 +254,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_features(d)
 
 
-ORACLE_TEXT_QUALITY_SQL = f"""
-WITH t AS (
-    SELECT doc_id, text,
-           length(text) AS n_chars,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-               x -> list_contains({STOPWORDS!r}, x))) AS n_stop,
-           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
-    FROM documents
-)
-SELECT doc_id, n_chars, n_tokens,
-       ROUND((n_chars - (n_tokens - 1)) / GREATEST(n_tokens, 1), 4) AS avg_token_len,
-       ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) AS stopword_ratio,
-       ROUND(n_punct / GREATEST(n_chars, 1)::DOUBLE, 4) AS punct_ratio,
-       ROUND(LEAST(n_tokens / 100.0, 1.0) * 0.4
-             + ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) * 0.4
-             + (1 - ROUND(n_punct / GREATEST(n_chars, 1)::DOUBLE, 4)) * 0.2, 4) AS quality_score
-FROM t
-"""
+ORACLE_TEXT_QUALITY_SQL = quality_features_sql("documents")
 
 
 def langid(col: Column) -> Column:
@@ -181,7 +290,7 @@ def _langid_sql() -> str:
     return f"""
 WITH t AS (
     SELECT doc_id,
-           list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')) AS toks
+           list_distinct({tokens_sql('lower(text)')}) AS toks
     FROM documents
 ),
 s AS (SELECT doc_id, toks, {best} AS best FROM t)
@@ -231,19 +340,16 @@ def text_model_adapter(
 
 def default_langid_model(texts):
     """Default ``model_fn`` for language-ID: the same stopword-profile
-    heuristic as ``langid()``, vectorized over a pandas Series.
-    Tokenizes with the exact Java-``\\s`` ASCII class (via
-    ``xjs.pipeline.grams._WS``) — python ``str.split()`` is
-    unicode-aware and would diverge from the Catalyst form on NBSP and
-    friends.  Swap in fastText by replacing this function only."""
-    from xjs.pipeline.grams import _WS
-
+    heuristic as ``langid()``, vectorized over a pandas Series and
+    tokenized by ``split_tokens`` (python ``str.split()`` would diverge
+    from the Catalyst form on NBSP and friends).  Swap in fastText by
+    replacing this function only."""
     profiles = [(lang, set(ws)) for lang, ws in LANG_PROFILES]
 
     def one(t):
         if t is None:
             return "und"
-        toks = set(_WS.split(t.lower().strip(" ")))
+        toks = set(split_tokens(t.lower()))
         best_lang, best = "und", 0
         for lang, ws in profiles:
             s = len(toks & ws)
@@ -308,8 +414,7 @@ SELECT doc_id,
                                     i -> substring(text, i, {FP_GRAM}))
                 ELSE [text] END,
            g -> {g})) AS fp,
-       CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
+       {token_count_sql('text')} AS n_tokens
 FROM t
 """
 
@@ -379,17 +484,15 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_text_repetition_sql() -> str:
-    return """
+    return f"""
 WITH base AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
+    SELECT doc_id, {tokens_sql('text')} AS t,
+           {token_count_sql('text')} AS n_tokens
     FROM documents
 ),
 tok AS (
-    SELECT doc_id, i, t[i] AS tok
-    FROM base, unnest(range(1, len(t) + 1)) AS r(i)
-    WHERE n_tokens > 0
+    SELECT doc_id, pos AS i, gram AS tok
+    FROM ({token_windows_sql('base', 1, where='n_tokens > 0')})
 ),
 islands AS (
     SELECT doc_id, tok,
@@ -402,9 +505,7 @@ runlen AS (
     ) GROUP BY doc_id
 ),
 bg AS (
-    SELECT doc_id, list_aggregate(t[i:i+1], 'string_agg', ' ') AS g
-    FROM base, unnest(range(1, len(t))) AS r(i)
-    WHERE n_tokens >= 2
+    SELECT doc_id, gram AS g FROM ({token_windows_sql('base', 2)})
 ),
 bgstats AS (
     SELECT doc_id, MAX(c) AS top_c, SUM(c) AS n_bg FROM (
@@ -455,8 +556,7 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def oracle_text_tokens_sql() -> str:
     return f"""
 SELECT doc_id,
-       CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_ws_tokens,
+       {token_count_sql('text')} AS n_ws_tokens,
        len(regexp_extract_all(text, '{BPE_PATTERN}')) AS n_bpe_tokens
 FROM documents
 """

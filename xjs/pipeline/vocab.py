@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xjs.pipeline.text import tokens
+from xjs.pipeline.text import arrow_tokens, tokens, tokens_sql
 
 PPM = 1_000_000
 DEFAULT_V = 1000
@@ -63,7 +63,7 @@ def _doc_mask(text):
 
     trimmed = pc.utf8_trim(pc.fill_null(text, ""), characters=" ")
     return pc.and_(pc.is_valid(text),
-                   pc.greater(pc.utf8_length(trimmed), 0)), trimmed
+                   pc.greater(pc.utf8_length(trimmed), 0))
 
 
 def _token_stat_partials(df: DataFrame, text_col: str,
@@ -73,8 +73,7 @@ def _token_stat_partials(df: DataFrame, text_col: str,
     lives in exactly ONE batch: per-batch distinct-doc counts (dfp)
     SUM to the global document frequency, and the shuffle carries one
     row per distinct token per batch instead of one per (token, doc)
-    pair.  Tokenizer parity with split(trim(text), '\\s+') via
-    pc.ascii_split_whitespace (the grams.py contract, test-pinned)."""
+    pair.  Tokens from text.arrow_tokens."""
     from collections.abc import Iterator
 
     def build(batches: Iterator) -> Iterator:
@@ -83,14 +82,11 @@ def _token_stat_partials(df: DataFrame, text_col: str,
         import pyarrow.compute as pc
 
         for batch in batches:
-            mask, trimmed = _doc_mask(batch.column(1))
-            texts = pc.filter(trimmed, mask)
+            texts = pc.filter(batch.column(1), _doc_mask(batch.column(1)))
             if len(texts) == 0:
                 continue
-            lists = pc.ascii_split_whitespace(texts)
-            counts = pc.list_value_length(lists).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            flat = pc.list_flatten(lists)
+            flat, off = arrow_tokens(texts)
+            counts = np.diff(off)
             if len(flat) == 0:
                 continue
             row_ids = np.repeat(np.arange(len(texts), dtype=np.int64),
@@ -261,15 +257,13 @@ def _tfidf_top_terms_arrow(df: DataFrame, vocab: DataFrame, k: int,
         ] = np.arange(n_v)
 
         for batch in batches:
-            mask, trimmed = _doc_mask(batch.column(1))
+            mask = _doc_mask(batch.column(1))
             ids = batch.column(0).filter(mask)
-            texts = pc.filter(trimmed, mask)
+            texts = pc.filter(batch.column(1), mask)
             if len(texts) == 0 or n_v == 0:
                 continue
-            lists = pc.ascii_split_whitespace(texts)
-            counts = pc.list_value_length(lists).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            flat = pc.list_flatten(lists)
+            flat, off = arrow_tokens(texts)
+            counts = np.diff(off)
             row_ids = np.repeat(np.arange(len(texts), dtype=np.int64),
                                 counts)
             vidx = pc.fill_null(
@@ -313,9 +307,9 @@ def q_vocab_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                      total=corpus_token_total(d))
 
 
-_TOKEN_CTE = """
+_TOKEN_CTE = f"""
 tok AS (
-    SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+    SELECT doc_id, unnest({tokens_sql('text')}) AS token
     FROM documents
     WHERE text IS NOT NULL AND length(trim(text)) > 0
 ),
